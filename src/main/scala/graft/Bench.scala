@@ -25,9 +25,19 @@ object Bench {
     else None
   }
 
+  /** `SPARK_GRAFT_CPUS` as the core count: a positive integer in plain
+    * digits, or a refusal — the value lands in `local[...]`, unquoted in
+    * the summary JSON and in the default output file name, where `*` or
+    * a stray character would give invalid JSON or a glob-shaped path. */
+  def cpusOf(raw: String): String = {
+    require(raw.matches("[0-9]+") && raw.toIntOption.exists(_ > 0),
+      s"SPARK_GRAFT_CPUS must be a positive integer, got '$raw'")
+    raw
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = cpusOf(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     // shuffle partitions default to the core count, overridable for
     // partition-scaling experiments (does 10× growth on a fixed 32-way
     // layout track the partition count, i.e. scale out on a real cluster?)

@@ -131,8 +131,7 @@ object ManifestStats {
     // whose footer bounds can diverge from scan bounds (floats: NaN
     // poisons footer min/max while the scan's canonical() drops
     // non-finite bounds; decimals/INT96: representation).
-    if (bloomColumns.isEmpty && virtualCols.isEmpty && schema.isEmpty &&
-        sys.env.getOrElse("SPARK_GRAFT_FOOTER_STATS", "1") != "0") {
+    if (bloomColumns.isEmpty && virtualCols.isEmpty && schema.isEmpty) {
       collectFromFooters(spark, root, relPaths, rangeCols) match {
         case Some(m) => return m
         case None => () // any non-fast-pathable shape: fall through to the scan

@@ -364,20 +364,20 @@ object ManifestTable {
       (st, d) => applyDeltaParsed(st, parseDelta(d)))
   }
 
-  /** THE cold disk walk, shared by every resolution path (the heavy
-    * [[resolveParsedFromDisk]], the light [[routeStateAt]], the pruned
-    * [[coldOverlayAt]]): walk back from `version` to the nearest stored
-    * full form — a vacuum-materialized `.checkpoint` sidecar or a
-    * non-delta manifest — collecting the delta chain (newest first).
-    * One implementation, so the overlay semantics layered on top can
-    * never drift on WHICH bytes they resolve from. */
+  /** THE cold disk walk, shared by both resolution paths (the heavy
+    * [[resolveParsedFromDisk]] and the light [[coldOverlayAt]] that
+    * routing and pruned planning read): walk back from `version` to the
+    * nearest stored full form — a vacuum-materialized `.checkpoint`
+    * sidecar or a non-delta manifest — collecting the delta chain
+    * (newest first). One implementation, so the overlay semantics
+    * layered on top can never drift on WHICH bytes they resolve from. */
   private def storedChainAt(spark: SparkSession, root: String,
       version: Long): (String, Vector[String]) = {
-    // the header guard lives HERE, on the shared walk, so every cold
-    // resolution path (heavy parse, light routing, pruned overlay) gets
-    // the same refusal semantics: a zero-byte or header-truncated
-    // stored form is an in-flight publish or a torn copy, NEVER a valid
-    // state — without this, the light paths would quietly parse
+    // the header guard lives HERE, on the shared walk, so both cold
+    // resolution paths (heavy parse, light overlay) get the same
+    // refusal semantics: a zero-byte or header-truncated stored form
+    // is an in-flight publish or a torn copy, NEVER a valid state —
+    // without this, the light path would quietly parse
     // headerless text into an empty meta map (or die with a bare
     // NoSuchElementException on zero bytes) instead of the loud,
     // retryable [[CorruptManifest]] the heavy path throws
@@ -435,8 +435,8 @@ object ManifestTable {
       version: Long): Parsed =
     retryingCorrupt(resolveParsedFromDisk(spark, root, version))
 
-  /** The bounded in-flight retry, generic: every cold walk (heavy,
-    * light routing, pruned overlay) shares it so a planner resolving
+  /** The bounded in-flight retry, generic: every cold walk (heavy
+    * parse, light overlay) shares it so a planner resolving
     * routing state gets the same ~120 ms of patience as a committer's
     * re-base — the doc claim on [[resolveParsedRetrying]] holds for ALL
     * resolution entry points, not just the heavy one. */
@@ -521,10 +521,11 @@ object ManifestTable {
     new Path(s"$root/$LogDir/" + f"v$v%08d" + ".checkpoint")
 
   /** Persisted prune-index sidecar beside the checkpoint: the digested
-    * [[ColdOverlay]] of a pointer-form version, written opportunistically
-    * by the first COLD pruned probe so every LATER cold process plans
-    * from one pre-digested read — zero pointer-body decodes, zero delta
-    * replays ([[coldOverlayAt]]). Deterministic per (root, version)
+    * [[ColdOverlay]] of a pointer-form version whose overlay is trusted,
+    * written opportunistically by the first COLD probe (pruned read or
+    * routing) so every LATER cold process plans from one pre-digested
+    * read — zero pointer-body decodes, zero delta replays
+    * ([[coldOverlayAt]]). Deterministic per (root, version)
     * (derived from the immutable stored chain), so racing writers
     * produce identical bytes and the lost rename is ignored; carries the
     * standard CRC trailer, and any damage falls back to the chain walk. */
@@ -625,7 +626,6 @@ object ManifestTable {
     statsMapCache.remove(root, version)
     metaMapCache.remove(root, version)
     pruneIndexCache.remove(root, version)
-    routeCache.remove(root, version)
     coldOverlayCache.remove(root, version)
   }
 
@@ -641,7 +641,6 @@ object ManifestTable {
     metaMapCache.clear()
     segmentCache.clear()
     pruneIndexCache.clear()
-    routeCache.clear()
     coldOverlayCache.clear()
   }
 
@@ -1080,10 +1079,11 @@ object ManifestTable {
       * (the tip carries every txn-* watermark — [[txnWatermark]]),
       * never an O(versions) history scan. */
     val metaReads = new java.util.concurrent.atomic.AtomicLong()
-    /** Pointer-body decodes taken by COLD pruned planning ([[coldOverlayAt]]
-      * chain walks) — the persisted prune-index contract: after the first
-      * cold probe writes the `.pruneidx` sidecar, later cold processes
-      * decode ZERO pointer bytes. */
+    /** Pointer-body decodes: [[coldOverlayAt]] chain walks over a
+      * SEGMENTED base, whether routing or pruned planning asked (flat
+      * bases are not counted) — the persisted prune-index contract:
+      * after the first cold probe writes the `.pruneidx` sidecar, later
+      * cold processes decode ZERO pointer bytes. */
     val coldPointerDecodes = new java.util.concurrent.atomic.AtomicLong()
     def snapshot: (Long, Long) = (fullBodies.get, statsLinesSerialized.get)
   }
@@ -1847,35 +1847,20 @@ object ManifestTable {
     }
   }
 
-  /** COLD pruned-read plan — the lazy half of the two-tier layout: for
-    * an un-resident version whose stored form is the pointer body, the
-    * (kept files, schema, deletion vector) of a predicate read resolve
-    * from the pointer + delta chain loading ONLY segments whose rollup
-    * ADMITS the predicate. A point lookup on a cold 10M-file table
-    * reads one pointer body and the handful of surviving segment files
-    * — never the O(files) structural state, never the excluded
-    * segments' entries. None (caller falls back to the heavy path,
-    * bit-identical results) when: the state is already resident (the
-    * heavy path is then O(1)); the base is flat text (small table); the
-    * filter has no analysis base; a delta replaced/retracted an
-    * EXISTING file's stats (per-segment rollups can no longer be
-    * trusted without knowing which segment — rare, rewrite-shaped);
-    * or nothing survives (the heavy empty-read keeps schema nuances
-    * exact). Exclusion soundness under removes holds because a rollup
-    * over a member SUPERSET only over-approximates — it can only keep
-    * too much, never drop a live match. */
-  /** The per-version half of [[prunedColdPlan]] — everything the pruned
-    * cold read derives from the STORED bytes alone (pointer body + delta
-    * chain), independent of any particular filter: meta, table rollup,
-    * segment refs with their pointer rollups, the unsegmented tail with
-    * its stats overlay, removed paths, and whether the per-segment
-    * rollups stayed TRUSTWORTHY (false once a delta replaced or
-    * retracted an EXISTING member's stats — rewrite-shaped, rare).
-    * `None` = the stored base is flat text (small table, heavy path).
-    * LRU-cached per (root, version) beside [[routeCache]], so the
-    * repeated cold probes of a maintainer's [[readPrunedByKeys]] loop
-    * decode the pointer and replay the chain ONCE per version instead
-    * of once per probe. */
+  /** THE cold decode of one version — everything routing
+    * ([[tableMayMatch]]) and pruned planning ([[prunedColdPlan]],
+    * [[pruneCounts]]) derive from the STORED bytes alone (full form +
+    * delta chain), independent of any particular filter: meta, table
+    * rollup, segment refs with their pointer rollups, the unsegmented
+    * tail with its stats overlay, and removed paths. Defined for every
+    * stored base; meta and rollup are always exact. `trusted` says
+    * whether the per-segment half can plan a pruned read: false for a
+    * flat base (small table, no segment refs — heavy path) and once a
+    * delta replaced or retracted an EXISTING member's stats
+    * (rewrite-shaped, rare). LRU-cached per (root, version), so the
+    * repeated cold probes of a maintainer's [[readPrunedByKeys]] loop —
+    * or [[readCatalog]]'s route-then-read — decode the chain ONCE per
+    * version instead of once per probe. */
   private final case class ColdOverlay(
       meta: Map[String, String],
       tableRu: Option[ManifestStats.FileStats],
@@ -1886,7 +1871,7 @@ object ManifestTable {
       statsRetracted: Set[String],
       trusted: Boolean)
 
-  private val coldOverlayCache = new PerRootLru[Option[ColdOverlay]](4, 64)
+  private val coldOverlayCache = new PerRootLru[ColdOverlay](8, 64)
 
   /** Render a [[ColdOverlay]] as sidecar text (CRC-trailed; see
     * [[pruneIdxPath]]). Line shapes reuse the manifest vocabulary:
@@ -1971,8 +1956,12 @@ object ManifestTable {
       statsOverlay.result(), retracted.result(), trusted)
   }
 
+  /** [[ColdOverlay]] of `v`: a trusted `.pruneidx` sidecar when one
+    * exists, else the chain walk. A sidecar marked `trusted=0` is never
+    * read back: its meta and rollup may be folded only part-way down
+    * the chain, and routing must not answer from them. */
   private def coldOverlayAt(spark: SparkSession, root: String,
-      v: Long): Option[ColdOverlay] = coldOverlayCache.getOrCompute(root, v) {
+      v: Long): ColdOverlay = coldOverlayCache.getOrCompute(root, v) {
     val f0 = fs(spark, root)
     val sidecar = pruneIdxPath(root, v)
     val fromSidecar: Option[ColdOverlay] =
@@ -1982,15 +1971,14 @@ object ManifestTable {
         val text = try new String(
           org.apache.commons.io.IOUtils.toByteArray(in), StandardCharsets.UTF_8)
         finally in.close()
-        Some(parseOverlay(text))
+        Some(parseOverlay(text)).filter(_.trusted)
       } catch { case scala.util.control.NonFatal(_) => None } // damaged: chain walk
-    if (fromSidecar.isDefined) fromSidecar
-    else retryingCorrupt {
-    ComposeMeters.coldPointerDecodes.incrementAndGet()
-    val (full, chain) = storedChainAt(spark, root, v)
-    if (!isSegmented(full)) None
-    else {
-      // base pointer parse: meta, table rollup, segment refs
+    fromSidecar.getOrElse(retryingCorrupt {
+      val (full, chain) = storedChainAt(spark, root, v)
+      val segmented = isSegmented(full)
+      if (segmented) ComposeMeters.coldPointerDecodes.incrementAndGet()
+      // base header parse: meta, table rollup, segment refs — the
+      // inline header every stored full form carries, flat or pointer
       val payload = verifyIntegrity(full)
       var meta = Map.empty[String, String]
       var tableRu: Option[ManifestStats.FileStats] = None
@@ -2011,39 +1999,43 @@ object ManifestTable {
               java.net.URLDecoder.decode(t, StandardCharsets.UTF_8))._2)))
         case _ =>
       }
-      // delta overlay — mirrors applyDeltaParsed's merge, tracking only
-      // what pruning needs: tail files (with their stats), removed
-      // paths, meta, and whether any EXISTING file's stats changed
-      // (distrust stops the fold — the overlay is unusable either way)
+      // delta overlay — mirrors applyDeltaParsed's merge (minus before
+      // plus). Meta and the table rollup fold to the END of the chain;
+      // the tail-stats tracking only pruning needs (tail files with
+      // their stats, removed paths) stops once the overlay is distrusted
+      // (a flat base never starts it: its files are not in the overlay)
       var tail = Vector.empty[String]
       val tailSet = mutable.Set.empty[String]
       val removed = mutable.Set.empty[String]
       val statsOverlay = mutable.Map.empty[String, ManifestStats.FileStats]
       val statsRetracted = mutable.Set.empty[String]
-      var trusted = true
-      val it = chain.reverseIterator
-      while (trusted && it.hasNext) {
-        val parts = parseDelta(it.next())
+      var trusted = segmented
+      chain.reverseIterator.foreach { d =>
+        val parts = parseDelta(d)
         meta = (meta -- parts.metaMinus) ++ parts.metaPlus.iterator.map {
           case (k, line) => k -> line.stripPrefix(MetaPrefix).split("=", 2)(1)
         }
-        if (parts.removes.nonEmpty) {
-          removed ++= parts.removes
-          tail = tail.filterNot(parts.removes)
-          parts.removes.foreach { p =>
-            tailSet -= p; statsOverlay -= p; statsRetracted -= p; ()
+        if (trusted) {
+          if (parts.removes.nonEmpty) {
+            removed ++= parts.removes
+            tail = tail.filterNot(parts.removes)
+            parts.removes.foreach { p =>
+              tailSet -= p; statsOverlay -= p; statsRetracted -= p; ()
+            }
           }
+          tail = tail ++ parts.adds
+          tailSet ++= parts.adds
         }
-        tail = tail ++ parts.adds
-        tailSet ++= parts.adds
         parts.statsMinus.foreach { k =>
           if (k == ManifestStats.RollupKey) tableRu = None
+          else if (!trusted) ()
           else if (tailSet.contains(k)) { statsOverlay -= k; statsRetracted += k; () }
           else trusted = false // an existing member lost stats
         }
         parts.statsPlus.foreach { case (k, line) =>
           if (k == ManifestStats.RollupKey)
             tableRu = Some(ManifestStats.deserialize(line.stripPrefix(StatsPrefix))._2)
+          else if (!trusted) ()
           else if (tailSet.contains(k)) {
             statsOverlay(k) = ManifestStats.deserialize(line.stripPrefix(StatsPrefix))._2
             statsRetracted -= k; ()
@@ -2052,86 +2044,104 @@ object ManifestTable {
       }
       val ov = ColdOverlay(meta, tableRu, refs.result(), tail, removed.toSet,
         statsOverlay.toMap, statsRetracted.toSet, trusted)
-      // persist the digest beside the checkpoint so the NEXT cold
+      // persist a trusted digest beside the checkpoint so the NEXT cold
       // process plans from one read (atomic tmp+rename; deterministic
       // content per version, so a lost race is ignored; best-effort —
       // a read-only filesystem just keeps paying the chain walk)
-      try {
+      if (trusted) try {
         val tmp = new Path(s"$root/$LogDir/.tmp-${UUID.randomUUID()}")
         val out = f0.create(tmp, false)
         try out.write(renderOverlay(v, ov).getBytes(StandardCharsets.UTF_8))
         finally out.close()
         if (!f0.rename(tmp, sidecar)) { f0.delete(tmp, false); () }
       } catch { case scala.util.control.NonFatal(_) => }
-      Some(ov)
-    }
-    }
+      ov
+    })
   }
 
+  /** The analysis base a cold decision compiles `filter` against: the
+    * committed schema and partition transforms in `meta`. None for a
+    * pre-schema log or a filter the stats layer cannot analyze — both
+    * mean keep-everything. */
+  private def coldConds(spark: SparkSession, meta: Map[String, String],
+      filter: org.apache.spark.sql.Column)
+      : Option[(org.apache.spark.sql.types.StructType,
+        Seq[org.apache.spark.sql.catalyst.expressions.Expression])] =
+    meta.get(SchemaKey).flatMap { j =>
+      val schema = org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      val transforms = meta.get(TransformsKey).toSeq
+        .flatMap(_.split(';')).flatMap(PartitionTransform.parse)
+      ManifestStats.compileConds(spark, schema, filter, transforms,
+        columnRenames(schema)).map(schema -> _)
+    }
+
+  /** The cold pruning walk over a trusted overlay, shared by
+    * [[prunedColdPlan]] and [[pruneCounts]]: a segment whose pointer
+    * rollup rules `conds` out is reported to `excluded` with its member
+    * count and ZERO loads; every other segment loads, and each live
+    * member, then each tail file, is `visit`ed with its verdict —
+    * `None` when it carries no stats (absence means keep, never skip). */
+  private def walkColdOverlay(spark: SparkSession, root: String, ov: ColdOverlay,
+      conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])(
+      excluded: Int => Unit, visit: (String, Option[Boolean]) => Unit): Unit = {
+    def verdict(st: Option[ManifestStats.FileStats]): Option[Boolean] =
+      st.map(ManifestStats.mayMatchConds(conds, _))
+    ov.refs.foreach { case (name, count, ruOpt) =>
+      if (ruOpt.exists(r => !ManifestStats.mayMatchConds(conds, r))) excluded(count)
+      else {
+        val seg = loadSegment(spark, root, name, count)
+        seg.members.foreach { m =>
+          if (!ov.removed.contains(m)) visit(m, verdict(
+            if (ov.statsRetracted.contains(m)) None
+            else ov.statsOverlay.get(m).orElse(seg.stats.get(m).map(l =>
+              ManifestStats.deserialize(l.stripPrefix(StatsPrefix))._2))))
+        }
+      }
+    }
+    ov.tail.foreach(m => visit(m, verdict(
+      if (ov.statsRetracted.contains(m)) None else ov.statsOverlay.get(m))))
+  }
+
+  /** COLD pruned-read plan — the lazy half of the two-tier layout: for
+    * an un-resident version whose stored form is the pointer body, the
+    * (kept files, schema, deletion vector) of a predicate read resolve
+    * from the pointer + delta chain loading ONLY segments whose rollup
+    * ADMITS the predicate. A point lookup on a cold 10M-file table
+    * reads one pointer body and the handful of surviving segment files
+    * — never the O(files) structural state, never the excluded
+    * segments' entries. None (caller falls back to the heavy path,
+    * bit-identical results) when: the state is already resident (the
+    * heavy path is then O(1)); the overlay is not trusted (flat base,
+    * or a delta replaced/retracted an EXISTING file's stats, so
+    * per-segment rollups can no longer be trusted without knowing which
+    * segment); the filter has no analysis base; or nothing survives
+    * (the heavy empty-read keeps schema nuances exact). Exclusion
+    * soundness under removes holds because a rollup over a member
+    * SUPERSET only over-approximates — it can only keep too much, never
+    * drop a live match. */
   private def prunedColdPlan(spark: SparkSession, root: String, v: Long,
       filter: org.apache.spark.sql.Column)
       : Option[(Seq[String], Option[org.apache.spark.sql.types.StructType], Option[String])] = {
     if (stateCache.get(root, v) != null) return None
-    val ov = coldOverlayAt(spark, root, v) match {
-      case Some(o) if o.trusted => o
-      case _ => return None // flat base, or rollups distrusted: heavy path
-    }
-    val meta = ov.meta
-    val tableRu = ov.tableRu
-    val refs = ov.refs
-    val tail = ov.tail
-    val removed = ov.removed
-    val statsOverlay = ov.statsOverlay
-    val statsRetracted = ov.statsRetracted
-    val schema = meta.get(SchemaKey)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(return None) // pre-schema log: keep-everything, heavy path
-    val transforms = meta.get(TransformsKey).toSeq
-      .flatMap(_.split(';')).flatMap(PartitionTransform.parse)
-    val conds = ManifestStats.compileConds(spark, schema, filter,
-      transforms, columnRenames(schema)).getOrElse(return None)
-    if (tableRu.exists(r => !ManifestStats.mayMatchConds(conds, r)))
+    val ov = coldOverlayAt(spark, root, v)
+    if (!ov.trusted) return None // flat base, or rollups distrusted: heavy path
+    val (schema, conds) = coldConds(spark, ov.meta, filter)
+      .getOrElse(return None) // no analysis base: keep-everything, heavy path
+    if (ov.tableRu.exists(r => !ManifestStats.mayMatchConds(conds, r)))
       return None // provably empty: heavy empty-read keeps schema exact
     val kept = Seq.newBuilder[String]
-    refs.foreach { case (name, count, ruOpt) =>
-      if (ruOpt.exists(r => !ManifestStats.mayMatchConds(conds, r)))
-        ManifestStats.PruneMeters.segmentsExcluded.incrementAndGet() // zero loads
-      else {
-        val seg = loadSegment(spark, root, name, count)
-        seg.members.foreach { m =>
-          if (!removed.contains(m)) {
-            val fsOpt =
-              if (statsRetracted.contains(m)) None
-              else statsOverlay.get(m).orElse(seg.stats.get(m).map(l =>
-                ManifestStats.deserialize(l.stripPrefix(StatsPrefix))._2))
-            fsOpt match {
-              case Some(st) =>
-                ManifestStats.PruneMeters.filesEvaluated.incrementAndGet()
-                if (ManifestStats.mayMatchConds(conds, st)) kept += m
-              case None => kept += m
-            }
-          }
-        }
-      }
-    }
-    tail.foreach { m =>
-      val fsOpt = if (statsRetracted.contains(m)) None else statsOverlay.get(m)
-      fsOpt match {
-        case Some(st) =>
-          ManifestStats.PruneMeters.filesEvaluated.incrementAndGet()
-          if (ManifestStats.mayMatchConds(conds, st)) kept += m
-        case None => kept += m
-      }
-    }
+    walkColdOverlay(spark, root, ov, conds)(
+      _ => { ManifestStats.PruneMeters.segmentsExcluded.incrementAndGet(); () },
+      (m, verdict) => {
+        if (verdict.isDefined) ManifestStats.PruneMeters.filesEvaluated.incrementAndGet()
+        if (verdict.forall(identity)) kept += m
+      })
     val keptFiles = kept.result()
     if (keptFiles.isEmpty) None // heavy empty-read keeps schema nuances exact
-    else Some((keptFiles, Some(schema), meta.get(DvKey)))
+    else Some((keptFiles, Some(schema), ov.meta.get(DvKey)))
   }
 
-  /** The (kept, dropped, version) split [[readPruned]] would use —
-    * driver-only planning, exposed so callers and specs can observe
-    * skipping effectiveness directly. */
   /** The NAMES-FREE sibling of [[pruneFiles]]: (kept, dropped) FILE
     * COUNTS of a predicate read at `version`, computed COLD in
     * O(pointer + surviving segments) — an EXCLUDED segment contributes
@@ -2155,52 +2165,23 @@ object ManifestTable {
       (k.size.toLong, d.size.toLong, ver)
     }
     if (stateCache.get(root, v) != null) return heavy()
-    val ov = coldOverlayAt(spark, root, v) match {
-      case Some(o) if o.trusted && o.removed.isEmpty => o
-      case _ => return heavy()
-    }
-    val schema = ov.meta.get(SchemaKey)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(return heavy())
-    val transforms = ov.meta.get(TransformsKey).toSeq
-      .flatMap(_.split(';')).flatMap(PartitionTransform.parse)
-    val conds = ManifestStats.compileConds(spark, schema, filter,
-      transforms, columnRenames(schema)).getOrElse(return heavy())
+    val ov = coldOverlayAt(spark, root, v)
+    if (!ov.trusted || ov.removed.nonEmpty) return heavy()
+    val (_, conds) = coldConds(spark, ov.meta, filter).getOrElse(return heavy())
+    if (ov.tableRu.exists(r => !ManifestStats.mayMatchConds(conds, r)))
+      // provably empty: every file drops, counted from pointer + tail
+      return (0L, ov.refs.iterator.map(_._2.toLong).sum + ov.tail.size, v)
     var kept = 0L
     var dropped = 0L
-    if (ov.tableRu.exists(r => !ManifestStats.mayMatchConds(conds, r))) {
-      // provably empty: every file drops, counted from pointer + tail
-      dropped = ov.refs.iterator.map(_._2.toLong).sum + ov.tail.size
-      return (0L, dropped, v)
-    }
-    ov.refs.foreach { case (name, count, ruOpt) =>
-      if (ruOpt.exists(r => !ManifestStats.mayMatchConds(conds, r)))
-        dropped += count // whole segment excluded: ZERO member loads
-      else {
-        val seg = loadSegment(spark, root, name, count)
-        seg.members.foreach { m =>
-          val fsOpt = ov.statsOverlay.get(m).orElse(seg.stats.get(m).map(l =>
-            ManifestStats.deserialize(l.stripPrefix(StatsPrefix))._2))
-          fsOpt match {
-            case Some(st) =>
-              if (ManifestStats.mayMatchConds(conds, st)) kept += 1 else dropped += 1
-            case None => kept += 1 // absence means keep, never skip
-          }
-        }
-      }
-    }
-    ov.tail.foreach { m =>
-      val fsOpt = if (ov.statsRetracted.contains(m)) None else ov.statsOverlay.get(m)
-      fsOpt match {
-        case Some(st) =>
-          if (ManifestStats.mayMatchConds(conds, st)) kept += 1 else dropped += 1
-        case None => kept += 1
-      }
-    }
+    walkColdOverlay(spark, root, ov, conds)(
+      dropped += _,
+      (_, verdict) => if (verdict.forall(identity)) kept += 1 else dropped += 1)
     (kept, dropped, v)
   }
 
+  /** The (kept, dropped, version) split [[readPruned]] would use —
+    * driver-only planning, exposed so callers and specs can observe
+    * skipping effectiveness directly. */
   def pruneFiles(spark: SparkSession, root: String, filter: org.apache.spark.sql.Column,
       version: Option[Long] = None): (Seq[String], Seq[String], Long) = {
     val vs = versions(spark, root)
@@ -2282,12 +2263,16 @@ object ManifestTable {
     * `true` whenever the table lacks a rollup or the rollup admits the
     * predicate — keep-biased like every skipping tier.
     *
-    * COLD cost is the point: the answer resolves through
-    * [[routeStateAt]] — the inline meta + rollup of the stored text
-    * plus the delta chain's overlay — WITHOUT loading a single segment
-    * file or building the O(files) structural state. Routing a
-    * predicate across 10k tables of 10M files each reads 10k pointer
-    * bodies, not 10^10 file entries. */
+    * COLD cost is the point: a resident structural state answers in
+    * O(1); otherwise the (meta, rollup) pair comes from the version's
+    * [[ColdOverlay]] — the inline header of the stored full form plus
+    * the delta chain's overlay, or the trusted `.pruneidx` sidecar —
+    * WITHOUT loading a single segment file or building the O(files)
+    * structural state. Routing a predicate across 10k tables of 10M
+    * files each reads 10k pointer bodies, not 10^10 file entries. A
+    * cold route of a segmented table persists the sidecar exactly as a
+    * cold [[readPruned]] does, and a route-then-read of one version
+    * ([[readCatalog]]) decodes its chain once. */
   def tableMayMatch(spark: SparkSession, root: String,
       filter: org.apache.spark.sql.Column,
       version: Option[Long] = None): Boolean = {
@@ -2295,82 +2280,19 @@ object ManifestTable {
     require(vs.nonEmpty, s"$root is not a manifest table (no $LogDir)")
     val v = version.getOrElse(vs.max)
     require(vs.contains(v), s"version $v not in log (have ${vs.mkString(",")})")
-    val (meta, rollup) = routeStateAt(spark, root, v)
-    val schema = meta.get(SchemaKey)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
-      .getOrElse(return true)
-    rollup match {
-      case Some(r) =>
-        val transforms = meta.get(TransformsKey).toSeq
-          .flatMap(_.split(';')).flatMap(PartitionTransform.parse)
-        ManifestStats.statsMayMatch(spark, schema, filter, r,
-          transforms = transforms, renames = columnRenames(schema))
-      case None => true
-    }
-  }
-
-  /** Light ROUTING state of `version`: (committed meta map, table-level
-    * rollup), resolved without loading segment files or building the
-    * O(files) structural state. Both live INLINE in every stored full
-    * form — flat text and the two-tier pointer body alike — and a delta
-    * chain only overlays meta actions and the rollup's own stats line
-    * (file paths can never collide with the rollup pseudo-key), so the
-    * walk is O(stored-header bytes + Σ|delta|). A resident structural
-    * state short-circuits at O(1). LRU-cached beside the other
-    * per-version caches; integrity trailers verify exactly as the heavy
-    * parse would. */
-  private val routeCache =
-    new PerRootLru[(Map[String, String], Option[ManifestStats.FileStats])](8, 64)
-
-  private def routeStateAt(spark: SparkSession, root: String, version: Long)
-      : (Map[String, String], Option[ManifestStats.FileStats]) =
-    routeCache.getOrCompute(root, version) {
-      val resident = stateCache.get(root, version)
+    val resident = stateCache.get(root, v)
+    val (meta, rollup) =
       if (resident != null)
-        (metaMapOf(root, version, resident),
+        (metaMapOf(root, v, resident),
           resident.statsLines.get(ManifestStats.RollupKey)
             .map(l => ManifestStats.deserialize(l.stripPrefix(StatsPrefix))._2))
       else {
-        def lightOf(text: String): (Map[String, String], Option[ManifestStats.FileStats]) = {
-          val payload = verifyIntegrity(text)
-          var ru: Option[ManifestStats.FileStats] = None
-          val meta = Map.newBuilder[String, String]
-          payload.linesIterator.foreach {
-            case l if l.startsWith(MetaPrefix) =>
-              val kv = l.stripPrefix(MetaPrefix).split("=", 2)
-              if (kv.length == 2) meta += kv(0) -> kv(1)
-            case l if l.startsWith(StatsPrefix) =>
-              val p = l.stripPrefix(StatsPrefix)
-              if (java.net.URLDecoder.decode(
-                  p.split('|')(0), StandardCharsets.UTF_8) == ManifestStats.RollupKey)
-                ru = Some(ManifestStats.deserialize(p)._2)
-            case _ =>
-          }
-          (meta.result(), ru)
-        }
-        // the shared cold walk, light: nearest full snapshot or
-        // vacuum-materialized sidecar, then the delta chain's overlay —
-        // under the same bounded in-flight retry as the heavy parse
-        retryingCorrupt {
-        val (full, chain) = storedChainAt(spark, root, version)
-        var (meta, ru) = lightOf(full)
-        chain.reverseIterator.foreach { d =>
-          val parts = parseDelta(d)
-          // minus before plus — applyDeltaParsed's merge order
-          meta = (meta -- parts.metaMinus) ++ parts.metaPlus.iterator.map {
-            case (k, line) => k -> line.stripPrefix(MetaPrefix).split("=", 2)(1)
-          }
-          if (parts.statsMinus.contains(ManifestStats.RollupKey)) ru = None
-          parts.statsPlus.foreach { case (k, line) =>
-            if (k == ManifestStats.RollupKey)
-              ru = Some(ManifestStats.deserialize(line.stripPrefix(StatsPrefix))._2)
-          }
-        }
-        (meta, ru)
-        }
+        val ov = coldOverlayAt(spark, root, v)
+        (ov.meta, ov.tableRu)
       }
-    }
+    rollup.forall(r => coldConds(spark, meta, filter)
+      .forall { case (_, conds) => ManifestStats.mayMatchConds(conds, r) })
+  }
 
   /** Read the table at `version` (default: latest).
     *
@@ -3979,11 +3901,12 @@ object ManifestTable {
     // learn what a finished job already told you): zero 'delete' rows
     // skips the delete-key collect, zero 'insert' rows skips the
     // insert-side isEmpty probe — an initial-load or delete-only batch
-    // drops from four feed passes to two.
+    // drops from four feed passes to two. The collect is bounded: only
+    // four tags are legal, so a fifth row already proves the feed bad.
     val tagCounts: Option[Map[Any, Long]] =
       if (feedTags.isDefined) None
       else Some(fd.groupBy(col(ct)).agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("__n")).collect()
+          org.apache.spark.sql.functions.lit(1)).as("__n")).limit(5).collect()
         .map(r => (r.get(0), r.getLong(1))).toMap)
     val tags: Set[Any] = feedTags.map(_.map(t => t: Any)).getOrElse(tagCounts.get.keySet)
     require(tags.subsetOf(Set[Any]("insert", "delete", "refresh", "truncate")),

@@ -31,4 +31,12 @@ class BenchGuardSpec extends AnyFunSuite {
     assert(Bench.divergenceWarning(Seq.empty).isEmpty)
     assert(Bench.divergenceWarning(Seq(42.0)).isEmpty)
   }
+
+  test("SPARK_GRAFT_CPUS must be a positive integer before it shapes the master, JSON or file name") {
+    assert(Bench.cpusOf("8") === "8")
+    assert(Bench.cpusOf("32") === "32")
+    Seq("*", "0", "-1", "+4", "4x", " 4", "", "4.0", "99999999999").foreach { bad =>
+      intercept[IllegalArgumentException](Bench.cpusOf(bad))
+    }
+  }
 }

@@ -98,6 +98,21 @@ class ChangeFeedSpec extends SparkSpec {
     assert(ManifestTable.versions(spark, root).max === 1L)
   }
 
+  test("applyChangesMor: a garbage feed of 1,000 distinct tags refuses after a bounded tag collect") {
+    val root = freshRoot("acm_garbage")
+    import spark.implicits._
+    ManifestTable.create(spark, root, Seq((1L, "a")).toDF("id", "v"))
+    val garbage = spark.range(1000).select(col("id"), lit("a").as("v"),
+      format_string("bogus-%04d", col("id")).as(ct))
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.applyChangesMor(spark, root, garbage, "id", "w", 0L)
+    }
+    val named = "bogus-\\d{4}".r.findAllIn(e.getMessage).toSet.size
+    assert(named >= 1 && named <= 5,
+      s"the refusal must name at most 5 of the feed's tags, named $named")
+    assert(ManifestTable.versions(spark, root).max === 1L)
+  }
+
   test("changeFeed stream: initial load, appends, and MOR deletes drain into a converging mirror; restart resumes") {
     val src = freshRoot("cf_src")
     val dst = freshRoot("cf_dst")

@@ -97,9 +97,10 @@ class CorruptionSpec extends SparkSpec {
   }
 
   test("the LIGHT cold walks refuse damaged text like the heavy parse: routing and pruning, zero-byte and headerless") {
-    // routeStateAt (tableMayMatch) and coldOverlayAt (pruned planning)
-    // resolve through the same storedChainAt as the heavy parse — the
-    // header guard lives on that shared walk, so a zero-byte in-flight
+    // coldOverlayAt (the one light decode behind tableMayMatch and
+    // pruned planning) resolves through the same storedChainAt as the
+    // heavy parse — the header guard lives on that shared walk, so a
+    // zero-byte in-flight
     // full must surface CorruptManifest from the light paths too (never
     // a bare NoSuchElementException, never a quietly-empty meta map
     // that upgrades "may match" answers into wrong "no-match" ones)

@@ -424,6 +424,120 @@ class TieredLogSpec extends SparkSpec {
     } finally ManifestTable.SegmentTargetSize = saved
   }
 
+  /** `src` cut into twelfths by DISJOINT contiguous `o_orderkey` ranges:
+    * the sorted keys and the slicer. Committed one slice per version
+    * under SegmentTargetSize = 8, the v10 checkpoint seals slices 0..9
+    * into segments of 8 and 2; later slices ride the delta tail. */
+  private def twelfths(src: org.apache.spark.sql.DataFrame)
+      : (Array[Long], Int => org.apache.spark.sql.DataFrame) = {
+    val keys = src.select("o_orderkey").distinct().orderBy("o_orderkey")
+      .collect().map(_.getLong(0))
+    (keys, i => {
+      val lo = keys(i * keys.length / 12)
+      val hiIdx = (i + 1) * keys.length / 12
+      val hi = if (hiIdx >= keys.length) Long.MaxValue else keys(hiIdx)
+      src.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi).coalesce(1)
+    })
+  }
+
+  private def commitSlices(root: String, slice: Int => org.apache.spark.sql.DataFrame,
+      n: Int): Unit = {
+    ManifestTable.create(spark, root, slice(0), statsColumns = Seq("o_orderkey"))
+    (1 until n).foreach(i =>
+      ManifestTable.append(spark, root, slice(i), statsColumns = Seq("o_orderkey")))
+  }
+
+  private def pruneIdx(root: String, v: Long): java.nio.file.Path =
+    Paths.get(root, "_graft_log", f"v$v%08d.pruneidx")
+
+  test("cold routing persists the prune-index sidecar: a second cold route decodes zero pointer bytes") {
+    import graft.sources.ManifestTable.ComposeMeters
+    val root = freshRoot()
+    val saved = ManifestTable.SegmentTargetSize
+    ManifestTable.SegmentTargetSize = 8
+    try {
+      val (keys, slice) = twelfths(orders)
+      commitSlices(root, slice, 12)
+      ManifestTable.dropResolvedCacheForTest() // fresh process #1
+      val d0 = ComposeMeters.coldPointerDecodes.get
+      assert(ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === keys.head))
+      assert(!ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === -1L))
+      assert(ComposeMeters.coldPointerDecodes.get - d0 === 1L,
+        "the first cold route decodes the pointer chain exactly once")
+      assert(Files.exists(pruneIdx(root, 12L)),
+        "a cold route of a segmented table must persist the sidecar")
+      ManifestTable.dropResolvedCacheForTest() // fresh process #2: sidecar hit
+      val d1 = ComposeMeters.coldPointerDecodes.get
+      val s0 = ComposeMeters.segmentLoads.get
+      assert(ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === keys.head))
+      assert(!ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === -1L))
+      assert(ComposeMeters.coldPointerDecodes.get - d1 === 0L,
+        "the second cold route must decode zero pointer bytes (sidecar hit)")
+      assert(ComposeMeters.segmentLoads.get - s0 === 0L)
+    } finally ManifestTable.SegmentTargetSize = saved
+  }
+
+  test("cold routing ignores a sidecar marked trusted=0 and walks the chain instead") {
+    import graft.sources.ManifestTable.ComposeMeters
+    val root = freshRoot()
+    val donor = freshRoot()
+    val saved = ManifestTable.SegmentTargetSize
+    ManifestTable.SegmentTargetSize = 8
+    try {
+      val (keys, slice) = twelfths(orders)
+      commitSlices(root, slice, 12)
+      // the donor holds the same rows with every key shifted past the
+      // root's range: its sidecar's rollup EXCLUDES every root key
+      commitSlices(donor, i => slice(i).withColumn("o_orderkey",
+        col("o_orderkey") + 1000000000L), 12)
+      ManifestTable.dropResolvedCacheForTest()
+      assert(ManifestTable.tableMayMatch(spark, donor, col("o_orderkey") === keys.head + 1000000000L))
+      val donorText = new String(Files.readAllBytes(pruneIdx(donor, 12L)),
+        java.nio.charset.StandardCharsets.UTF_8)
+      def plant(text: String): Unit = {
+        Files.write(pruneIdx(root, 12L), text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        Files.deleteIfExists(Paths.get(root, "_graft_log", ".v00000012.pruneidx.crc"))
+        ManifestTable.dropResolvedCacheForTest()
+      }
+      // control: planted as trusted, the all-excluding sidecar IS read
+      plant(donorText)
+      assert(!ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === keys.head),
+        "a trusted sidecar answers cold routing")
+      // marked trusted=0 (a distrusted overlay whose meta/rollup may be
+      // partly folded): never read — the chain answers, keep-biased
+      plant(resign(donorText.replaceFirst(" trusted=1 ", " trusted=0 ")))
+      val d0 = ComposeMeters.coldPointerDecodes.get
+      assert(ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === keys.head),
+        "an in-range key must route to the table despite the distrusted sidecar")
+      assert(ComposeMeters.coldPointerDecodes.get - d0 === 1L,
+        "a distrusted sidecar falls back to exactly one chain decode")
+    } finally ManifestTable.SegmentTargetSize = saved
+  }
+
+  test("a distrusted overlay still folds meta and rollup to the end of the chain") {
+    val root = freshRoot()
+    val saved = ManifestTable.SegmentTargetSize
+    ManifestTable.SegmentTargetSize = 8
+    try {
+      val (keys, slice) = twelfths(orders)
+      commitSlices(root, slice, 10) // v10: segmented checkpoint
+      // v11: ANALYZE replaces every existing member's stats line — a
+      // delta that distrusts the per-segment rollups
+      val v11 = ManifestTable.analyze(spark, root, Seq("o_orderkey", "o_custkey"))
+      assert(v11 === 11L && isStoredDelta(root, v11), "analyze must store as a delta")
+      // v12: an append past the checkpoint's key range widens the rollup
+      ManifestTable.append(spark, root, slice(10), statsColumns = Seq("o_orderkey"))
+      val probe = keys(10 * keys.length / 12)
+      ManifestTable.dropResolvedCacheForTest()
+      assert(ManifestTable.tableMayMatch(spark, root, col("o_orderkey") === probe),
+        "cold routing must see the rollup the append widened after the distrusting delta")
+      assert(!Files.exists(pruneIdx(root, 12L)), "a distrusted overlay writes no sidecar")
+      ManifestTable.dropResolvedCacheForTest()
+      assert(ManifestTable.readPruned(spark, root, col("o_orderkey") === probe).count() ===
+        slice(10).filter(col("o_orderkey") === probe).count())
+    } finally ManifestTable.SegmentTargetSize = saved
+  }
+
   test("cold pruned read: only segments whose rollup admits the predicate load from disk") {
     import graft.sources.ManifestTable.ComposeMeters
     val root = freshRoot()
