@@ -58,7 +58,7 @@ private[graft] object LakeKeys {
       graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
       MT.append(s, fact, orders.filter(col("o_orderstatus") =!= "F"))
       graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
-      graft.plans.MartRewrite.register(s, fact, "o_orderstatus", "o_totalprice", mart)
+      graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         val q = MT.read(s, fact).groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_orders"),
@@ -97,7 +97,7 @@ private[graft] object LakeKeys {
       MT.create(s, fact, orders.filter(col("o_orderstatus") === "F"))
       MT.append(s, fact, orders.filter(col("o_orderstatus") =!= "F"))
       graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
-      graft.plans.MartRewrite.register(s, fact, "o_orderstatus", "o_totalprice", mart)
+      graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         def leafStrings(df: org.apache.spark.sql.DataFrame) =
           df.queryExecution.executedPlan.collectLeaves().map(_.toString)
@@ -163,7 +163,7 @@ private[graft] object LakeKeys {
     "mv4_rewrite_composite" -> ((s, dir) => {
       // composite-key MV routing: a (status, priority) count/dsum mart
       // maintained incrementally through the total feed (an append + a
-      // MOR delete window — maintainAggMartKeys, the lake30 algebra
+      // MOR delete window — maintainAggMartTotal, the lake30 algebra,
       // over a surrogate-bound composite key), then a multi-key
       // aggregate in the REVERSED grouping order re-plans onto it.
       // Pins: routing, a single-key control staying on the fact, and
@@ -174,15 +174,17 @@ private[graft] object LakeKeys {
       val MT = graft.sources.ManifestTable
       val keys = Seq("o_orderstatus", "o_orderpriority")
       MT.create(s, fact, orders.filter(col("o_orderstatus") === "F"))
-      graft.ops.LakeOps.maintainAggMartKeys(s, fact, mart, keys, "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, keys, "o_totalprice",
+        writerId = "aggmart-keys")
       MT.append(s, fact, orders.filter(col("o_orderstatus") =!= "F"))
       MT.deleteMor(s, fact, col("o_custkey") % 5 === 0)
-      graft.ops.LakeOps.maintainAggMartKeys(s, fact, mart, keys, "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, keys, "o_totalprice",
+        writerId = "aggmart-keys")
       // a DV-bearing fact read carries the anti-join above the scan, a
       // shape the rewrite correctly cannot prove (spec-pinned safety);
       // purge materializes the deletes so the fact is pure files again
       MT.purgeDeletes(s, fact)
-      graft.plans.MartRewrite.registerKeys(s, fact, keys, "o_totalprice", mart)
+      graft.plans.MartRewrite.register(s, fact, keys, "o_totalprice", mart)
       try {
         def leafStrings(df: org.apache.spark.sql.DataFrame) =
           df.queryExecution.executedPlan.collectLeaves().map(_.toString)
@@ -266,7 +268,7 @@ private[graft] object LakeKeys {
       val MT = graft.sources.ManifestTable
       MT.create(s, fact, orders)
       graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
-      graft.plans.MartRewrite.register(s, fact, "o_orderstatus", "o_totalprice", mart)
+      graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         def leafStrings(df: org.apache.spark.sql.DataFrame) =
           df.queryExecution.executedPlan.collectLeaves().map(_.toString)
@@ -956,7 +958,7 @@ private[graft] object LakeKeys {
       val cursor = graft.sources.ManifestTable.versions(s, root).max
       graft.sources.ManifestTable.append(s, root, p2)
       graft.sources.ManifestTable.deleteMor(s, root, col("o_orderkey") % 7 === 0)
-      val (feed, tip) = graft.sources.ManifestTable.readChangesWithDeletes(s, root, cursor)
+      val (feed, tip) = graft.sources.ManifestTable.readChanges(s, root, cursor)
       val del = feed.filter(col("_change_type") === "delete").drop("_change_type")
       val ins = feed.filter(col("_change_type") === "insert").drop("_change_type")
       val reconciled = graft.sources.ManifestTable.read(s, root, Some(cursor))
@@ -1020,7 +1022,7 @@ private[graft] object LakeKeys {
       val f = orders.filter(col("o_orderstatus") === "F")
       MT.create(s, src, f)
       MT.enableRowTracking(s, src)
-      graft.ops.LakeOps.maintainAggMartTotal(s, src, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, src, mart, Seq("o_orderstatus"), "o_totalprice")
       MT.deleteMor(s, src, col("o_custkey") % 5 === 0)
       val updates = f.filter(col("o_custkey") % 5 =!= 0)
         .filter(col("o_orderkey") % 10 === 0)
@@ -1029,10 +1031,10 @@ private[graft] object LakeKeys {
       MT.merge(s, src, updates, "o_orderkey")
       MT.compact(s, src, 64L * 1024 * 1024)
       val (tip, _) = graft.ops.LakeOps.maintainAggMartTotal(
-        s, src, mart, "o_orderstatus", "o_totalprice")
+        s, src, mart, Seq("o_orderstatus"), "o_totalprice")
       val vBefore = MT.versions(s, mart).max
       val replayNoop = graft.ops.LakeOps.maintainAggMartTotal(
-        s, src, mart, "o_orderstatus", "o_totalprice") == ((tip, 0L)) &&
+        s, src, mart, Seq("o_orderstatus"), "o_totalprice") == ((tip, 0L)) &&
         MT.versions(s, mart).max == vBefore
       val maintained = MT.read(s, mart)
         .select(col("o_orderstatus"), col("n_rows"), col("total").cast("double"))

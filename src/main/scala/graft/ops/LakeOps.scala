@@ -89,7 +89,7 @@ object LakeOps {
   private[graft] def reclusterIfNeeded(spark: org.apache.spark.sql.SparkSession,
       root: String, keyCol: String, statsColumns: Seq[String]): Unit = {
     import graft.sources.ManifestTable
-    val tip = ManifestTable.versions(spark, root).max
+    val tip = tipOf(spark, root)
     val files = ManifestTable.manifestFiles(spark, root, tip)
     if (files.size > ReclusterFileThreshold) {
       val bytes = ManifestTable.liveBytes(spark, root, tip)
@@ -281,8 +281,32 @@ object LakeOps {
   private val AggCursorKey = "agg-cursor"
   private val TotalType = org.apache.spark.sql.types.DecimalType(28, 4)
 
-  private def countSumAgg(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
-    df.groupBy(keyCol).agg(
+  /** The newest version of the manifest table at `root`. */
+  private def tipOf(spark: org.apache.spark.sql.SparkSession, root: String): Long = {
+    val vs = graft.sources.ManifestTable.versions(spark, root)
+    require(vs.nonEmpty, s"$root is not a manifest table")
+    vs.max
+  }
+
+  /** Σ n_rows of the count mart committed at `version` — a bootstrap's
+    * source row count, read from the O(groups) mart instead of a second
+    * scan of the source (count is total over groups by construction). */
+  private def martRows(spark: org.apache.spark.sql.SparkSession, martRoot: String,
+      version: Long): Long =
+    graft.sources.ManifestTable.read(spark, martRoot, Some(version))
+      .agg(coalesce(sum(col("n_rows")), lit(0L))).head.getLong(0)
+
+  /** Row count of the table written at `version`: the committed files'
+    * parquet footers (zero jobs), else a counting read. */
+  private def writtenRows(spark: org.apache.spark.sql.SparkSession, root: String,
+      version: Long): Long = {
+    import graft.sources.ManifestTable
+    ManifestTable.committedRowCount(spark, root, version)
+      .getOrElse(ManifestTable.read(spark, root, Some(version)).count())
+  }
+
+  private def countSumAgg(df: DataFrame, keyCols: Seq[String], valueCol: String): DataFrame =
+    df.groupBy(keyCols.map(col): _*).agg(
       count(lit(1)).as("n_rows"),
       ExactSums.dsumPartial(col(valueCol)).cast(TotalType).as("total"))
 
@@ -319,22 +343,13 @@ object LakeOps {
       keyCol: String,
       valueCol: String): (Long, Long) = {
     import graft.sources.ManifestTable
-    val srcTip = {
-      val vs = ManifestTable.versions(spark, srcRoot)
-      require(vs.nonEmpty, s"$srcRoot is not a manifest table")
-      vs.max
-    }
+    val srcTip = tipOf(spark, srcRoot)
     val martVs = ManifestTable.versions(spark, martRoot)
     if (martVs.isEmpty) {
       val src = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      // write FIRST, report the count from the O(groups) mart — see
-      // maintainAggMartTotal's bootstrap (same two-scans-of-the-source
-      // shape removed)
-      val v = ManifestTable.create(spark, martRoot, countSumAgg(src, keyCol, valueCol),
+      val v = ManifestTable.create(spark, martRoot, countSumAgg(src, Seq(keyCol), valueCol),
         meta = Map(AggCursorKey -> srcTip.toString))
-      val n = ManifestTable.read(spark, martRoot, Some(v))
-        .agg(coalesce(sum(col("n_rows")), lit(0L))).head.getLong(0)
-      (srcTip, n)
+      (srcTip, martRows(spark, martRoot, v))
     } else {
       val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
         .getOrElse(AggCursorKey, throw new IllegalStateException(
@@ -343,7 +358,7 @@ object LakeOps {
       else {
         val (delta, tip) = ManifestTable.readChangesSince(spark, srcRoot, cursor)
         val deltaRows = delta.count()
-        val d = countSumAgg(delta, keyCol, valueCol).alias("d")
+        val d = countSumAgg(delta, Seq(keyCol), valueCol).alias("d")
         val cur = ManifestTable.read(spark, martRoot).alias("m")
         val upserts = d.join(cur, Seq(keyCol), "left")
           .select(col(keyCol),
@@ -371,74 +386,70 @@ object LakeOps {
     * is ONE atomic [[graft.sources.ManifestTable.applyChangesMor]]
     * commit on the mart (batchId = consumed source version, so a crash
     * replay is the standard exactly-once no-op; the watermark IS the
-    * cursor). Sources with rewrites in the window need row tracking
+    * cursor). The feed is [[graft.sources.ManifestTable.readChanges]]:
+    * sources with rewrites in the window need row tracking
     * ([[graft.sources.ManifestTable.enableRowTracking]]); pure
     * append + MOR-delete windows maintain untracked via the positional
     * feed. Refresh cost: O(window change volume + affected groups).
-    * Returns (consumed source version, change rows aggregated). */
+    *
+    * One grouping key gives the (key, n_rows, total) mart, bound on the
+    * key itself; a COMPOSITE key gives (k1, …, kn, n_rows, total, mkey),
+    * where `mkey` is the surrogate the atomic apply binds on. The delta
+    * algebra is the same for both. The bootstrap writes first and reads
+    * the source row count back from the mart, so it scans the source
+    * once. Returns (consumed source version, change rows aggregated). */
   def maintainAggMartTotal(
       spark: org.apache.spark.sql.SparkSession,
       srcRoot: String,
       martRoot: String,
-      keyCol: String,
+      keyCols: Seq[String],
       valueCol: String,
       writerId: String = "aggmart-total"): (Long, Long) = {
     import graft.sources.ManifestTable
-    val srcTip = {
-      val vs = ManifestTable.versions(spark, srcRoot)
-      require(vs.nonEmpty, s"$srcRoot is not a manifest table")
-      vs.max
-    }
+    require(keyCols.nonEmpty, "need at least one grouping key")
+    val bindCol = if (keyCols.size == 1) keyCols.head else "mkey"
+    def bound(agg: DataFrame): DataFrame =
+      if (keyCols.size == 1) agg else agg.withColumn("mkey", surrogateKey(keyCols))
+    val srcTip = tipOf(spark, srcRoot)
     val txnKey = s"txn-$writerId"
     val martVs = ManifestTable.versions(spark, martRoot)
     if (martVs.isEmpty) {
       val src = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      // write FIRST: the reported source row count is the sum of the
-      // committed per-group counts (count is total over groups by
-      // construction), read back from the O(groups) mart instead of a
-      // second full scan of the source
-      val v = ManifestTable.create(spark, martRoot, countSumAgg(src, keyCol, valueCol),
+      val v = ManifestTable.create(spark, martRoot, bound(countSumAgg(src, keyCols, valueCol)),
         meta = Map(txnKey -> srcTip.toString))
-      val n = ManifestTable.read(spark, martRoot, Some(v))
-        .agg(coalesce(sum(col("n_rows")), lit(0L))).head.getLong(0)
-      (srcTip, n)
-    } else {
-      val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
-        .getOrElse(txnKey, throw new IllegalStateException(
-          s"$martRoot has no $txnKey watermark — not a total-feed agg mart")).toLong
-      if (cursor == srcTip) (srcTip, 0L) // caught up: no mart commit
-      else {
-        val tracked = ManifestTable.rowTrackingEnabled(spark, srcRoot, cursor)
-        val (feed, tip) =
-          if (tracked)
-            ManifestTable.readChangesRowTracked(spark, srcRoot, cursor, Some(srcTip))
-          else
-            ManifestTable.readChangesWithDeletes(spark, srcRoot, cursor, Some(srcTip))
-        val fd = feed.localCheckpoint() // consumed twice: count + aggregate
-        val deltaRows = fd.count()
-        val ins = col("_change_type") === "insert"
-        val d = fd.groupBy(keyCol).agg(
-          sum(when(ins, 1L).otherwise(-1L)).as("dn"),
-          ExactSums.dsumPartial(when(ins, col(valueCol)).otherwise(-col(valueCol)))
-            .cast(TotalType).as("dtotal"))
-        val cur = ManifestTable.read(spark, martRoot).alias("m")
-        val updated = d.alias("d").join(cur, Seq(keyCol), "left")
-          .select(col(keyCol),
-            (coalesce(col("m.n_rows"), lit(0L)) + col("d.dn")).as("n_rows"),
-            (coalesce(col("m.total"), lit(0).cast(TotalType)) + col("d.dtotal"))
-              .cast(TotalType).as("total"))
-          .localCheckpoint()
-        // one atomic apply: every affected group retracts, the
-        // still-populated ones re-insert with their new aggregates;
-        // zero-count groups simply never re-enter (rebuild parity)
-        val martFeed = updated.withColumn("_change_type", lit("delete"))
-          .unionByName(updated.filter(col("n_rows") > 0)
-            .withColumn("_change_type", lit("insert")))
-        ManifestTable.applyChangesMor(spark, martRoot, martFeed, keyCol,
-          writerId, batchId = tip, feedTags = Some(Set("insert", "delete")))
-        (tip, deltaRows)
-      }
+      return (srcTip, martRows(spark, martRoot, v))
     }
+    val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
+      .getOrElse(txnKey, throw new IllegalStateException(
+        s"$martRoot has no $txnKey watermark — not a total-feed agg mart")).toLong
+    if (cursor == srcTip) return (srcTip, 0L) // caught up: no mart commit
+    val (feed, tip) = ManifestTable.readChanges(spark, srcRoot, cursor, Some(srcTip))
+    val fd = feed.localCheckpoint() // consumed twice: count + aggregate
+    val deltaRows = fd.count()
+    val ins = col("_change_type") === "insert"
+    val d = bound(fd.groupBy(keyCols.map(col): _*).agg(
+      sum(when(ins, 1L).otherwise(-1L)).as("dn"),
+      ExactSums.dsumPartial(when(ins, col(valueCol)).otherwise(-col(valueCol)))
+        .cast(TotalType).as("dtotal")))
+    val cur = ManifestTable.read(spark, martRoot).alias("m")
+    // the bind column is the join key (unqualified); other keys come
+    // from the delta side
+    def keyOut(k: String): Column = if (k == bindCol) col(k) else col(s"d.$k")
+    val updated = bound(d.alias("d").join(cur, Seq(bindCol), "left")
+      .select(keyCols.map(keyOut) ++ Seq(
+        (coalesce(col("m.n_rows"), lit(0L)) + col("d.dn")).as("n_rows"),
+        (coalesce(col("m.total"), lit(0).cast(TotalType)) + col("d.dtotal"))
+          .cast(TotalType).as("total")): _*))
+      .localCheckpoint()
+    // one atomic apply: every affected group retracts, the
+    // still-populated ones re-insert with their new aggregates;
+    // zero-count groups simply never re-enter (rebuild parity)
+    val martFeed = updated.withColumn("_change_type", lit("delete"))
+      .unionByName(updated.filter(col("n_rows") > 0)
+        .withColumn("_change_type", lit("insert")))
+    ManifestTable.applyChangesMor(spark, martRoot, martFeed, bindCol,
+      writerId, batchId = tip, feedTags = Some(Set("insert", "delete")))
+    (tip, deltaRows)
   }
 
   /** Composite-key surrogate: one non-null string that identifies a
@@ -450,74 +461,6 @@ object LakeOps {
   private def surrogateKey(keyCols: Seq[String]): Column =
     concat_ws("\u0001",
       keyCols.map(k => coalesce(col(k).cast("string"), lit("\u0002"))): _*)
-
-  /** [[maintainAggMartTotal]] generalized to COMPOSITE grouping keys:
-    * the mart is (k1, …, kn, n_rows, total, mkey) where `mkey` is the
-    * surrogate the atomic apply binds on; the maintained aggregates and
-    * the delta algebra are exactly the single-key maintainer's (signed
-    * counts, exact DECIMAL partials, zero-count groups leave). Returns
-    * (consumed source version, change rows aggregated). */
-  def maintainAggMartKeys(
-      spark: org.apache.spark.sql.SparkSession,
-      srcRoot: String,
-      martRoot: String,
-      keyCols: Seq[String],
-      valueCol: String,
-      writerId: String = "aggmart-keys"): (Long, Long) = {
-    import graft.sources.ManifestTable
-    require(keyCols.nonEmpty, "need at least one grouping key")
-    val srcTip = {
-      val vs = ManifestTable.versions(spark, srcRoot)
-      require(vs.nonEmpty, s"$srcRoot is not a manifest table")
-      vs.max
-    }
-    val txnKey = s"txn-$writerId"
-    def aggOf(df: DataFrame): DataFrame =
-      df.groupBy(keyCols.map(col): _*)
-        .agg(count(lit(1)).as("n_rows"),
-          ExactSums.dsumPartial(col(valueCol)).cast(TotalType).as("total"))
-        .withColumn("mkey", surrogateKey(keyCols))
-    val martVs = ManifestTable.versions(spark, martRoot)
-    if (martVs.isEmpty) {
-      val src = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      val n = src.count()
-      ManifestTable.create(spark, martRoot, aggOf(src),
-        meta = Map(txnKey -> srcTip.toString))
-      (srcTip, n)
-    } else {
-      val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
-        .getOrElse(txnKey, throw new IllegalStateException(
-          s"$martRoot has no $txnKey watermark — not a composite-key agg mart")).toLong
-      if (cursor == srcTip) return (srcTip, 0L)
-      val tracked = ManifestTable.rowTrackingEnabled(spark, srcRoot, cursor)
-      val (feed, tip) =
-        if (tracked)
-          ManifestTable.readChangesRowTracked(spark, srcRoot, cursor, Some(srcTip))
-        else ManifestTable.readChangesWithDeletes(spark, srcRoot, cursor, Some(srcTip))
-      val fd = feed.localCheckpoint()
-      val deltaRows = fd.count()
-      val ins = col("_change_type") === "insert"
-      val d = fd.groupBy(keyCols.map(col): _*).agg(
-        sum(when(ins, 1L).otherwise(-1L)).as("dn"),
-        ExactSums.dsumPartial(when(ins, col(valueCol)).otherwise(-col(valueCol)))
-          .cast(TotalType).as("dtotal"))
-        .withColumn("mkey", surrogateKey(keyCols))
-      val cur = ManifestTable.read(spark, martRoot).alias("m")
-      val updated = d.alias("d").join(cur, Seq("mkey"), "left")
-        .select((keyCols.map(k => col(s"d.$k")) ++ Seq(
-          (coalesce(col("m.n_rows"), lit(0L)) + col("d.dn")).as("n_rows"),
-          (coalesce(col("m.total"), lit(0).cast(TotalType)) + col("d.dtotal"))
-            .cast(TotalType).as("total"),
-          col("mkey"))): _*)
-        .localCheckpoint()
-      val martFeed = updated.withColumn("_change_type", lit("delete"))
-        .unionByName(updated.filter(col("n_rows") > 0)
-          .withColumn("_change_type", lit("insert")))
-      ManifestTable.applyChangesMor(spark, martRoot, martFeed, "mkey",
-        writerId, batchId = tip, feedTags = Some(Set("insert", "delete")))
-      (tip, deltaRows)
-    }
-  }
 
   private def minMaxAgg(df: DataFrame, keyCol: String, valueCol: String): DataFrame =
     df.groupBy(keyCol).agg(
@@ -550,6 +493,7 @@ object LakeOps {
     * the standard exactly-once no-op. Row-tracked sources maintain
     * through id-preserving rewrites; untracked ones through
     * append + MOR-delete windows (the positional feed's contract).
+    * The bootstrap writes first and reads Σ n_rows back from the mart.
     * Returns (consumed version, change rows, groups recomputed). */
   def maintainMinMaxMart(
       spark: org.apache.spark.sql.SparkSession,
@@ -559,30 +503,20 @@ object LakeOps {
       valueCol: String,
       writerId: String = "minmax-mart"): (Long, Long, Long) = {
     import graft.sources.ManifestTable
-    val srcTip = {
-      val vs = ManifestTable.versions(spark, srcRoot)
-      require(vs.nonEmpty, s"$srcRoot is not a manifest table")
-      vs.max
-    }
+    val srcTip = tipOf(spark, srcRoot)
     val txnKey = s"txn-$writerId"
     val martVs = ManifestTable.versions(spark, martRoot)
     if (martVs.isEmpty) {
       val src = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      val n = src.count()
-      ManifestTable.create(spark, martRoot, minMaxAgg(src, keyCol, valueCol),
+      val v = ManifestTable.create(spark, martRoot, minMaxAgg(src, keyCol, valueCol),
         meta = Map(txnKey -> srcTip.toString))
-      (srcTip, n, 0L)
+      (srcTip, martRows(spark, martRoot, v), 0L)
     } else {
       val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
         .getOrElse(txnKey, throw new IllegalStateException(
           s"$martRoot has no $txnKey watermark — not a min/max mart")).toLong
       if (cursor == srcTip) return (srcTip, 0L, 0L) // caught up: no commit
-      val tracked = ManifestTable.rowTrackingEnabled(spark, srcRoot, cursor)
-      val (feed, tip) =
-        if (tracked)
-          ManifestTable.readChangesRowTracked(spark, srcRoot, cursor, Some(srcTip))
-        else
-          ManifestTable.readChangesWithDeletes(spark, srcRoot, cursor, Some(srcTip))
+      val (feed, tip) = ManifestTable.readChanges(spark, srcRoot, cursor, Some(srcTip))
       val fd = feed.localCheckpoint()
       val deltaRows = fd.count()
       val ins = col("_change_type") === "insert"
@@ -639,10 +573,11 @@ object LakeOps {
     * closes the second — past the bound the rewrite disables itself
     * and queries fall back to the fresh fact scan.
     *
-    * `kind` = "sum" routes to [[maintainAggMartTotal]] (single key) or
-    * [[maintainAggMartKeys]] (composite key); "minmax" to
-    * [[maintainMinMaxMart]]. Returns (consumed source version, change
-    * rows aggregated). */
+    * `kind` = "sum" routes to [[maintainAggMartTotal]] and
+    * [[graft.plans.MartRewrite.register]] (single or composite key);
+    * "minmax" to [[maintainMinMaxMart]] and
+    * [[graft.plans.MartRewrite.registerMinMax]] (single key). Returns
+    * (consumed source version, change rows aggregated). */
   def maintainAndReregister(
       spark: org.apache.spark.sql.SparkSession,
       srcRoot: String,
@@ -653,31 +588,22 @@ object LakeOps {
       writerId: String = "aggmart-total",
       maxVersionLag: Long = Long.MaxValue): (Long, Long) = {
     require(keyCols.nonEmpty, "need at least one grouping key")
-    val (v, rows) = kind match {
-      case "sum" if keyCols.size == 1 =>
-        maintainAggMartTotal(spark, srcRoot, martRoot, keyCols.head, valueCol, writerId)
+    kind match {
       case "sum" =>
-        maintainAggMartKeys(spark, srcRoot, martRoot, keyCols, valueCol, writerId)
+        val r = maintainAggMartTotal(spark, srcRoot, martRoot, keyCols, valueCol, writerId)
+        graft.plans.MartRewrite.register(
+          spark, srcRoot, keyCols, valueCol, martRoot, maxVersionLag)
+        r
       case "minmax" =>
         require(keyCols.size == 1, "minmax marts are single-key")
-        val (v1, n, _) =
+        val (v, n, _) =
           maintainMinMaxMart(spark, srcRoot, martRoot, keyCols.head, valueCol, writerId)
-        (v1, n)
+        graft.plans.MartRewrite.registerMinMax(
+          spark, srcRoot, keyCols.head, valueCol, martRoot, maxVersionLag)
+        (v, n)
       case other =>
         throw new IllegalArgumentException(s"unknown mart kind '$other' (sum | minmax)")
     }
-    kind match {
-      case "sum" if keyCols.size == 1 =>
-        graft.plans.MartRewrite.register(
-          spark, srcRoot, keyCols.head, valueCol, martRoot, maxVersionLag)
-      case "sum" =>
-        graft.plans.MartRewrite.registerKeys(
-          spark, srcRoot, keyCols, valueCol, martRoot, maxVersionLag)
-      case _ =>
-        graft.plans.MartRewrite.registerMinMax(
-          spark, srcRoot, keyCols.head, valueCol, martRoot, maxVersionLag)
-    }
-    (v, rows)
   }
 
   /** Declarative table MIRROR maintenance with AUTOMATIC full-refresh
@@ -698,7 +624,9 @@ object LakeOps {
     *
     * At 100 TB: incremental windows cost O(change); the refresh arm
     * costs a full copy — exactly the cost a refusal implies, now paid
-    * declaratively instead of operationally. Returns (consumed source
+    * declaratively instead of operationally. The bootstrap and refresh
+    * arms write first and count the written rows from the committed
+    * footers, so they scan the source once. Returns (consumed source
     * version, mode ∈ bootstrap|noop|incremental|full_refresh, rows). */
   def maintainMirror(
       spark: org.apache.spark.sql.SparkSession,
@@ -707,19 +635,14 @@ object LakeOps {
       keyCol: String,
       writerId: String = "mirror"): (Long, String, Long) = {
     import graft.sources.ManifestTable
-    val srcTip = {
-      val vs = ManifestTable.versions(spark, srcRoot)
-      require(vs.nonEmpty, s"$srcRoot is not a manifest table")
-      vs.max
-    }
+    val srcTip = tipOf(spark, srcRoot)
     val txnKey = s"txn-$writerId"
     val mirrorVs = ManifestTable.versions(spark, mirrorRoot)
     if (mirrorVs.isEmpty) {
-      val content = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      val n = content.count()
-      ManifestTable.create(spark, mirrorRoot, content,
+      val v = ManifestTable.create(spark, mirrorRoot,
+        ManifestTable.read(spark, srcRoot, Some(srcTip)),
         meta = Map(txnKey -> srcTip.toString))
-      (srcTip, "bootstrap", n)
+      (srcTip, "bootstrap", writtenRows(spark, mirrorRoot, v))
     } else {
       val cursor = ManifestTable.manifestMeta(spark, mirrorRoot, mirrorVs.max)
         .getOrElse(txnKey, throw new IllegalStateException(
@@ -727,15 +650,8 @@ object LakeOps {
       if (cursor >= srcTip) (cursor, "noop", 0L)
       else {
         val attempt =
-          try {
-            ManifestTable.requireCursorVersion(spark, srcRoot, cursor)
-            val tracked = ManifestTable.rowTrackingEnabled(spark, srcRoot, cursor)
-            Some(
-              if (tracked)
-                ManifestTable.readChangesRowTracked(spark, srcRoot, cursor, Some(srcTip))
-              else
-                ManifestTable.readChangesWithDeletes(spark, srcRoot, cursor, Some(srcTip)))
-          } catch {
+          try Some(ManifestTable.readChanges(spark, srcRoot, cursor, Some(srcTip)))
+          catch {
             // ONLY the designed refusal ("this window is not expressible
             // as a row-level delta") converts to a full refresh; IO
             // errors / corrupted logs / misconfiguration stay loud
@@ -750,11 +666,10 @@ object LakeOps {
               writerId, batchId = tip)
             (tip, "incremental", n)
           case None =>
-            val content = ManifestTable.read(spark, srcRoot, Some(srcTip))
-            val n = content.count()
-            ManifestTable.overwrite(spark, mirrorRoot, content,
+            val v = ManifestTable.overwrite(spark, mirrorRoot,
+              ManifestTable.read(spark, srcRoot, Some(srcTip)),
               meta = Map(txnKey -> srcTip.toString))
-            (srcTip, "full_refresh", n)
+            (srcTip, "full_refresh", writtenRows(spark, mirrorRoot, v))
         }
       }
     }
@@ -762,6 +677,26 @@ object LakeOps {
 
   private val JoinCursorAKey = "join-cursor-a"
   private val JoinCursorBKey = "join-cursor-b"
+
+  /** [[maintainAndReregister]] for the JOIN mart: advance the
+    * incrementally-maintained A ⋈ B mart AND its
+    * [[graft.plans.MartRewrite.registerJoin]] registration in one call —
+    * the same lifecycle coupling, here over TWO sources (both cursors
+    * advance atomically with the mart; the registration re-snapshots
+    * both file sets; `maxVersionLag` bounds staleness on both). */
+  def maintainJoinAndReregister(
+      spark: org.apache.spark.sql.SparkSession,
+      aRoot: String,
+      bRoot: String,
+      martRoot: String,
+      aKeyCol: String,
+      bKeyCol: String,
+      maxVersionLag: Long = Long.MaxValue): (Long, Long, Long) = {
+    val r = maintainJoinMart(spark, aRoot, bRoot, martRoot, aKeyCol, bKeyCol)
+    graft.plans.MartRewrite.registerJoin(
+      spark, aRoot, bRoot, aKeyCol, bKeyCol, martRoot, maxVersionLag)
+    r
+  }
 
   /** Incrementally maintain an INNER-JOIN mart `A ⋈ B` over TWO
     * append-only manifest sources — the delta-join maintenance rule
@@ -789,27 +724,8 @@ object LakeOps {
     * Refresh cost at 100 TB: O(dA ⋈ B) + O(A ⋈ dB) probe work — with
     * the sources clustered on their join keys the dA leg prunes B's
     * files by dA's key range, never O(A ⋈ B). Returns
-    * (consumedA, consumedB, deltaRowsAppended). */
-  /** [[maintainAndReregister]] for the JOIN mart: advance the
-    * incrementally-maintained A ⋈ B mart AND its
-    * [[graft.plans.MartRewrite.registerJoin]] registration in one call —
-    * the same lifecycle coupling, here over TWO sources (both cursors
-    * advance atomically with the mart; the registration re-snapshots
-    * both file sets; `maxVersionLag` bounds staleness on both). */
-  def maintainJoinAndReregister(
-      spark: org.apache.spark.sql.SparkSession,
-      aRoot: String,
-      bRoot: String,
-      martRoot: String,
-      aKeyCol: String,
-      bKeyCol: String,
-      maxVersionLag: Long = Long.MaxValue): (Long, Long, Long) = {
-    val r = maintainJoinMart(spark, aRoot, bRoot, martRoot, aKeyCol, bKeyCol)
-    graft.plans.MartRewrite.registerJoin(
-      spark, aRoot, bRoot, aKeyCol, bKeyCol, martRoot, maxVersionLag)
-    r
-  }
-
+    * (consumedA, consumedB, deltaRowsAppended). The bootstrap writes
+    * the join first and counts its rows from the committed footers. */
   def maintainJoinMart(
       spark: org.apache.spark.sql.SparkSession,
       aRoot: String,
@@ -818,23 +734,17 @@ object LakeOps {
       aKeyCol: String,
       bKeyCol: String): (Long, Long, Long) = {
     import graft.sources.ManifestTable
-    def tipOf(root: String): Long = {
-      val vs = ManifestTable.versions(spark, root)
-      require(vs.nonEmpty, s"$root is not a manifest table")
-      vs.max
-    }
-    val aTip = tipOf(aRoot)
-    val bTip = tipOf(bRoot)
+    val aTip = tipOf(spark, aRoot)
+    val bTip = tipOf(spark, bRoot)
     def joined(a: DataFrame, b: DataFrame): DataFrame =
       a.join(b, col(aKeyCol) === col(bKeyCol))
     val martVs = ManifestTable.versions(spark, martRoot)
     if (martVs.isEmpty) {
       val mart = joined(ManifestTable.read(spark, aRoot, Some(aTip)),
         ManifestTable.read(spark, bRoot, Some(bTip)))
-      val n = mart.count()
-      ManifestTable.create(spark, martRoot, mart,
+      val v = ManifestTable.create(spark, martRoot, mart,
         meta = Map(JoinCursorAKey -> aTip.toString, JoinCursorBKey -> bTip.toString))
-      (aTip, bTip, n)
+      (aTip, bTip, writtenRows(spark, martRoot, v))
     } else {
       val meta = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
       val curA = meta.getOrElse(JoinCursorAKey, throw new IllegalStateException(
@@ -875,8 +785,9 @@ object LakeOps {
     * position-exact retraction of duplicate joined rows:
     *
     *  1. affected = distinct join keys in dA ∪ dB (either side, either
-    *     sign), from the row-tracked feed when the source has rewrites
-    *     in the window, else the positional delete-aware feed;
+    *     sign), from each source's
+    *     [[graft.sources.ManifestTable.readChanges]] (row-tracked
+    *     sources maintain through rewrites in the window);
     *  2. fresh truth for those keys = (A_tip ⋉ affected) ⋈
     *     (B_tip ⋉ affected) — both sides pruned by the semi join (with
     *     key-clustered facts the stats prune makes this O(affected));
@@ -900,13 +811,8 @@ object LakeOps {
       bKeyCol: String,
       writerId: String = "joinmart-total"): (Long, Long, Long) = {
     import graft.sources.ManifestTable
-    def tipOf(root: String): Long = {
-      val vs = ManifestTable.versions(spark, root)
-      require(vs.nonEmpty, s"$root is not a manifest table")
-      vs.max
-    }
-    val aTip = tipOf(aRoot)
-    val bTip = tipOf(bRoot)
+    val aTip = tipOf(spark, aRoot)
+    val bTip = tipOf(spark, bRoot)
     val (ckA, ckB) = (joinTotalCursorA(writerId), joinTotalCursorB(writerId))
     def joined(a: DataFrame, b: DataFrame): DataFrame =
       a.join(b, col(aKeyCol) === col(bKeyCol))
@@ -915,14 +821,10 @@ object LakeOps {
       val mart = joined(ManifestTable.read(spark, aRoot, Some(aTip)),
         ManifestTable.read(spark, bRoot, Some(bTip)))
       // write FIRST, report the row count from the committed files'
-      // parquet footers — the previous count()-then-create ran the full
-      // bootstrap join twice (once to count, once to write); the footer
-      // sum is exact (fresh create, no deletion vector) at zero jobs
+      // parquet footers — the full bootstrap join runs once
       val v = ManifestTable.create(spark, martRoot, mart,
         meta = Map(ckA -> aTip.toString, ckB -> bTip.toString))
-      val n = ManifestTable.committedRowCount(spark, martRoot, v)
-        .getOrElse(ManifestTable.read(spark, martRoot, Some(v)).count())
-      (aTip, bTip, n)
+      (aTip, bTip, writtenRows(spark, martRoot, v))
     } else {
       val meta = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
       def cursor(k: String): Long = meta.getOrElse(k, throw new IllegalStateException(
@@ -947,16 +849,12 @@ object LakeOps {
             "would silently no-op. Re-create the mart to adopt the " +
             "monotone tip-sum encoding."))
       if (curA == aTip && curB == bTip) return (aTip, bTip, 0L) // caught up
-      def feedOf(root: String, cur: Long, tip: Long): DataFrame = {
-        if (cur == tip) return null // no window on this side
-        val tracked = ManifestTable.rowTrackingEnabled(spark, root, cur)
-        val (f, _) =
-          if (tracked) ManifestTable.readChangesRowTracked(spark, root, cur, Some(tip))
-          else ManifestTable.readChangesWithDeletes(spark, root, cur, Some(tip))
-        f
-      }
-      val dA = Option(feedOf(aRoot, curA, aTip))
-      val dB = Option(feedOf(bRoot, curB, bTip))
+      // no window on a caught-up side
+      def feedOf(root: String, cur: Long, tip: Long): Option[DataFrame] =
+        if (cur == tip) None
+        else Some(ManifestTable.readChanges(spark, root, cur, Some(tip))._1)
+      val dA = feedOf(aRoot, curA, aTip)
+      val dB = feedOf(bRoot, curB, bTip)
       // affected join keys: either side, either sign — recompute beats
       // signed retraction because a MOR delete of one duplicate joined
       // row has no positional identity in the mart
@@ -1019,11 +917,11 @@ object LakeOps {
     val (aV, bV, _) = maintainJoinMartTotal(spark, aRoot, bRoot, joinMartRoot,
       aKeyCol, bKeyCol, writerId = s"$writerId-join")
     val (mV, aggRows) = maintainAggMartTotal(spark, joinMartRoot, aggMartRoot,
-      groupKeyCol, valueCol, writerId = s"$writerId-agg")
+      Seq(groupKeyCol), valueCol, writerId = s"$writerId-agg")
     graft.plans.MartRewrite.registerJoin(
       spark, aRoot, bRoot, aKeyCol, bKeyCol, joinMartRoot, maxVersionLag)
     graft.plans.MartRewrite.register(
-      spark, joinMartRoot, groupKeyCol, valueCol, aggMartRoot, maxVersionLag)
+      spark, joinMartRoot, Seq(groupKeyCol), valueCol, aggMartRoot, maxVersionLag)
     (aV, bV, mV, aggRows)
   }
 
@@ -1098,9 +996,7 @@ object LakeOps {
       minJaccard: Double = 0.1,
       writerId: String = "neardup"): (Long, Long, Long) = {
     import graft.sources.ManifestTable
-    val vs = ManifestTable.versions(spark, docsRoot)
-    require(vs.nonEmpty, s"$docsRoot is not a manifest table")
-    val tip = vs.max
+    val tip = tipOf(spark, docsRoot)
     val txnKey = s"txn-$writerId"
     // ONE tip-meta read per mart per window — txn-* keys carry forward
     // to the tip with max semantics ([[ManifestTable.metaWithTxnCarry]]),
@@ -1246,9 +1142,7 @@ object LakeOps {
       writerId: String = "ctm-sketch"): (Long, Long) = {
     import graft.sources.ManifestTable
     graft.functions.NativeExpressions.register(spark)
-    val vs = ManifestTable.versions(spark, probesRoot)
-    require(vs.nonEmpty, s"$probesRoot is not a manifest table")
-    val tip = vs.max
+    val tip = tipOf(spark, probesRoot)
     val txnKey = s"txn-$writerId"
     val paramMeta = Map("ctm-bits" -> numBits.toString, "ctm-hashes" -> numHashes.toString)
     def bloomOf(df: DataFrame): DataFrame =
@@ -1303,7 +1197,7 @@ object LakeOps {
       writerId: String = "ctm-sketch"): DataFrame = {
     import graft.sources.ManifestTable
     graft.functions.NativeExpressions.register(spark)
-    val sTip = ManifestTable.versions(spark, sketchRoot).max
+    val sTip = tipOf(spark, sketchRoot)
     val meta = ManifestTable.manifestMeta(spark, sketchRoot, sTip)
     val txnKey = s"txn-$writerId"
     val cursor = meta.getOrElse(txnKey, throw new IllegalStateException(
@@ -1383,9 +1277,7 @@ object LakeOps {
     import graft.sources.ManifestTable
     val cap = maxShingleFreq
     require(cap > 0, s"maxShingleFreq must be positive, got $cap")
-    val vs = ManifestTable.versions(spark, docsRoot)
-    require(vs.nonEmpty, s"$docsRoot is not a manifest table")
-    val tip = vs.max
+    val tip = tipOf(spark, docsRoot)
     val txnKey = s"txn-$writerId"
     val ct = "_change_type"
     // ONE tip-meta read per mart per window (txn-* keys carry forward to
@@ -1550,7 +1442,7 @@ object LakeOps {
           val endpointIds = shared.select(col("doc_a").as("doc_id"))
             .unionByName(shared.select(col("doc_b").as("doc_id"))).distinct()
           val unaffectedNeeded = endpointIds.join(affectedIds, Seq("doc_id"), "left_anti")
-          val sizesTip = ManifestTable.versions(spark, sizesRoot).max
+          val sizesTip = tipOf(spark, sizesRoot)
           val oldSizes = phase("w:oldSizes plan")(ManifestTable.readPrunedByKeys(spark, sizesRoot, "doc_id",
             unaffectedNeeded, version = Some(sizesTip), keysDistinct = true))
             .join(unaffectedNeeded, Seq("doc_id"), "left_semi")
@@ -1567,7 +1459,7 @@ object LakeOps {
           val freshPairs = phase("w:freshPairs ckpt")(withPairKey(fresh).localCheckpoint())
           // retract EVERY mart pair touching an affected doc (its fresh
           // truth — possibly absence — is in freshPairs)
-          val pairsTip = ManifestTable.versions(spark, pairsRoot).max
+          val pairsTip = tipOf(spark, pairsRoot)
           def touchedBy(kc: String): DataFrame =
             ManifestTable.readPrunedByKeys(spark, pairsRoot, kc,
               affectedIds.withColumnRenamed("doc_id", kc), version = Some(pairsTip),

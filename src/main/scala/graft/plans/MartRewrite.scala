@@ -21,9 +21,12 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * does — which is the whole point of maintaining the mart. Two mart
   * shapes route:
   *
-  *  - [[register]]: [[graft.ops.LakeOps.maintainAggMart]]'s
-  *    (key, n_rows, total) count/sum mart — `count(1)` and the dsum
-  *    cast tower over the registered value column;
+  *  - [[register]]: the count/sum mart of
+  *    [[graft.ops.LakeOps.maintainAggMart]] or
+  *    [[graft.ops.LakeOps.maintainAggMartTotal]] — (key, n_rows, total)
+  *    for one grouping key, (k1, …, kn, n_rows, total, mkey) for a
+  *    composite one — `count(1)` and the dsum cast tower over the
+  *    registered value column;
   *  - [[registerMinMax]]: [[graft.ops.LakeOps.maintainMinMaxMart]]'s
   *    (key, n_rows, vmin, vmax) mart — `count(1)`, `min(value)`,
   *    `max(value)`.
@@ -31,8 +34,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * Soundness contract: these are the aggregates the marts store
   * EXACTLY (count/sum self-maintainable with exact DECIMAL partials;
   * min/max maintained with the per-group recompute fallback), and the
-  * rewrite fires only on shapes it can prove — a single grouping
-  * attribute equal to the registered key, the precise aggregate forms,
+  * rewrite fires only on shapes it can prove — grouping attributes
+  * equal to the registered key SET, the precise aggregate forms,
   * and optionally a deterministic Filter over the KEY ALONE (key
   * predicates are group-preserving: every row of a group shares the
   * key, so the filter keeps or drops whole groups and pushes onto the
@@ -75,8 +78,10 @@ object MartRewrite extends Rule[LogicalPlan] {
     new java.util.concurrent.ConcurrentHashMap[(String, String, String), Reg]()
 
   /** Route future count/sum aggregates on `factRoot` (grouped by
-    * `keyCol`, summing `valueCol`) to the (key, n_rows, total) mart at
-    * `martRoot`, as of the mart's CURRENT version and the fact table's
+    * exactly the `keyCols` set, in any order, summing `valueCol`) to the
+    * (k1, …, kn, n_rows, total) mart at `martRoot` (a composite-key mart
+    * also stores its `mkey` surrogate, which routing ignores), as of the
+    * mart's CURRENT version and the fact table's
     * CURRENT file set. Re-register after each maintenance cycle to
     * advance both snapshots — or call
     * [[graft.ops.LakeOps.maintainAndReregister]], which does both in
@@ -86,17 +91,7 @@ object MartRewrite extends Rule[LogicalPlan] {
     * itself and queries fall back to the (fresh, correct) fact scan —
     * a maintenance loop that silently stops can no longer serve
     * unboundedly stale results. Also injects the rule (idempotently). */
-  def register(spark: SparkSession, factRoot: String, keyCol: String,
-      valueCol: String, martRoot: String,
-      maxVersionLag: Long = Long.MaxValue): Unit =
-    registerKind(spark, factRoot, Seq(keyCol), valueCol, martRoot, "sum",
-      Seq(keyCol, "n_rows", "total"), maxVersionLag)
-
-  /** [[register]] for a COMPOSITE grouping key — the
-    * [[graft.ops.LakeOps.maintainAggMartKeys]] mart shape
-    * (k1, …, kn, n_rows, total, mkey): routes count/dsum aggregates
-    * grouped by exactly that key SET (any order). */
-  def registerKeys(spark: SparkSession, factRoot: String, keyCols: Seq[String],
+  def register(spark: SparkSession, factRoot: String, keyCols: Seq[String],
       valueCol: String, martRoot: String,
       maxVersionLag: Long = Long.MaxValue): Unit =
     registerKind(spark, factRoot, keyCols, valueCol, martRoot, "sum",

@@ -229,12 +229,14 @@ class ManifestStreamSource(
 
 /** The delete-aware CHANGE FEED source (`option("changeFeed", "true")`)
   * — Delta's `readChangeFeed` as a stream: each micro-batch is
-  * [[ManifestTable.readChangesWithDeletes]] over the offset window, i.e.
+  * [[ManifestTable.readChanges]] over the offset window, i.e.
   * table rows tagged `_change_type` ('insert' | 'delete'), where the
   * plain source REFUSES past a merge-on-read delete. Deletion-vector
   * diffs stream as retractions; RESTOREs past a vector stream as
-  * resurrection inserts; only genuine file REWRITES (compact/merge/COW
-  * delete) still refuse — that delta is not row-expressible. Offsets are
+  * resurrection inserts; on an untracked table genuine file REWRITES
+  * (compact/merge/COW delete) still refuse — that delta is not
+  * row-expressible — while a row-tracked one streams through them
+  * (empty across OPTIMIZE, id-diffs across MERGE). Offsets are
   * manifest versions exactly like [[ManifestStreamSource]]; manifests,
   * data files, and vector sidecars are all immutable after publish, so a
   * replayed window re-derives the identical batch (vacuum retention
@@ -297,21 +299,10 @@ class ManifestChangeFeedSource(
     // correct form: read(endV) tagged insert (Delta's startingVersion=0).
     start.map(versionOf) match {
       case Some(startV) =>
-        // a row-tracked window upgrades to the version-walk feed, which
-        // serves an EMPTY delta across id-preserving rewrites — streams
-        // survive OPTIMIZE instead of refusing
         val attempt =
           try {
-            ManifestTable.requireCursorVersion(spark, root, startV)
-            Some(
-              if (ManifestTable.rowTrackingEnabled(spark, root, startV))
-                ManifestTable.readChangesRowTracked(spark, root, startV, Some(endV),
-                  includeRowId = includeRowIds)._1
-              else {
-                require(!includeRowIds,
-                  s"includeRowIds=true needs row tracking enabled on $root (enableRowTracking)")
-                ManifestTable.readChangesWithDeletes(spark, root, startV, Some(endV))._1
-              })
+            Some(ManifestTable.readChanges(spark, root, startV, Some(endV),
+              includeRowId = includeRowIds)._1)
           } catch {
             // a window that is not delta-expressible (overwrite, COW
             // rewrite, vacuumed cursor): under onRefusal=refresh the

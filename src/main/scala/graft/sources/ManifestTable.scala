@@ -59,7 +59,8 @@ import org.apache.spark.sql.functions.col
   * protocol — true object stores need a put-if-absent primitive or a
   * coordination service for step 4, exactly as the Delta paper notes.
   */
-/** Thrown by the `readChanges*` family when a window is NOT expressible
+/** Thrown by [[ManifestTable.readChanges]] (and the append-only
+  * [[ManifestTable.readChangesSince]]) when a window is NOT expressible
   * as a row-level delta (overwrite/restore rewrote the file set, a
   * pre-tracking rewrite, a vacuumed cursor, ...). This is the ONLY
   * exception a declarative-recovery consumer (change-feed source under
@@ -1574,15 +1575,6 @@ object ManifestTable {
   def rowTrackingEnabled(spark: SparkSession, root: String, version: Long): Boolean =
     manifestMeta(spark, root, version).get(RowTrackingKey).contains("on")
 
-  /** Delta-consumer precondition: probing any state AT the cursor
-    * version (e.g. [[rowTrackingEnabled]]) on a VACUUMED cursor would
-    * surface as a raw IO error — but a vacuumed cursor is the designed
-    * "window not delta-expressible" refusal. Call this first so the
-    * narrowed `catch NotDeltaExpressible` recovery sees the right type. */
-  def requireCursorVersion(spark: SparkSession, root: String, cursor: Long): Unit =
-    refuse(versions(spark, root).contains(cursor),
-      s"version $cursor not in log on $root — cursor invalid (vacuumed?), full refresh required")
-
   /** Meta keys that ride every content commit (transform spec + CHECK
     * constraints + row-tracking state); txn-* watermarks are handled by
     * [[commit]] itself. */
@@ -2309,6 +2301,11 @@ object ManifestTable {
     require(vs.nonEmpty, s"$root is not a manifest table (no $LogDir)")
     val v = version.getOrElse(vs.max)
     require(vs.contains(v), s"version $v not in log (have ${vs.mkString(",")})")
+    readAt(spark, root, v)
+  }
+
+  /** [[read]] at a version the caller already found in the log. */
+  private def readAt(spark: SparkSession, root: String, v: Long): DataFrame = {
     val files = manifestFiles(spark, root, v)
     val stored = manifestMeta(spark, root, v).get(SchemaKey)
       .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
@@ -2902,6 +2899,37 @@ object ManifestTable {
     (df, tip)
   }
 
+  /** THE change feed: the net delta between `sinceVersion` and
+    * `untilVersion` (default: the tip) as table rows tagged
+    * `_change_type` ('insert' | 'delete'), plus the consumed version.
+    * The table picks its own feed from its metadata AT the cursor: a
+    * row-tracked table takes the version walk
+    * ([[readChangesRowTracked]] — empty deltas across id-preserving
+    * rewrites, id-diffs across MERGE), any other the positional
+    * deletion-vector diff ([[readChangesWithDeletes]] — appends, MOR
+    * deletes, RESTOREs past a vector). The log is listed ONCE, and a
+    * cursor it no longer holds (vacuumed past) is the designed
+    * [[NotDeltaExpressible]] refusal, never an IO error from probing
+    * state at a missing version. `includeRowId` exposes `_row_id` and
+    * needs row tracking at the cursor. */
+  def readChanges(
+      spark: SparkSession,
+      root: String,
+      sinceVersion: Long,
+      untilVersion: Option[Long] = None,
+      includeRowId: Boolean = false): (DataFrame, Long) = {
+    val vs = versions(spark, root)
+    refuse(vs.contains(sinceVersion),
+      s"version $sinceVersion not in log on $root — cursor invalid (vacuumed?), full refresh required")
+    if (rowTrackingEnabled(spark, root, sinceVersion))
+      readChangesRowTracked(spark, root, sinceVersion, untilVersion, includeRowId, Some(vs))
+    else {
+      require(!includeRowId,
+        s"includeRowId=true needs row tracking enabled on $root (enableRowTracking)")
+      readChangesWithDeletes(spark, root, sinceVersion, untilVersion, Some(vs))
+    }
+  }
+
   /** Change-data feed WITH row-level deletes — the Delta-CDF shape for
     * merge-on-read tables, where [[readChangesSince]]'s pure-insert
     * contract refuses: the NET delta between `sinceVersion` and the tip
@@ -2922,13 +2950,14 @@ object ManifestTable {
     * ONLY the files the diff references (positional semi-join at the
     * scan); inserts read only the added files. Nothing table-sized
     * moves. */
-  def readChangesWithDeletes(
+  private[graft] def readChangesWithDeletes(
       spark: SparkSession,
       root: String,
       sinceVersion: Long,
-      untilVersion: Option[Long] = None): (DataFrame, Long) = {
+      untilVersion: Option[Long] = None,
+      listed: Option[Seq[Long]] = None): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.{broadcast, lit, sum}
-    val vs = versions(spark, root)
+    val vs = listed.getOrElse(versions(spark, root))
     refuse(vs.contains(sinceVersion),
       s"version $sinceVersion not in log (have ${vs.mkString(",")}) — cursor invalid, full refresh required")
     val tip = untilVersion.getOrElse(vs.max)
@@ -2942,7 +2971,7 @@ object ManifestTable {
     val ct = "_change_type"
     val dvNewP = deletionVector(spark, root, tip)
     val dvOldP = deletionVector(spark, root, sinceVersion)
-    val emptyTagged = read(spark, root, Some(tip)).limit(0).withColumn(ct, lit("insert"))
+    val emptyTagged = readAt(spark, root, tip).limit(0).withColumn(ct, lit("insert"))
     // rows at `positions` within `files`, via a positional SEMI join
     def rowsAt(files: Seq[String], positions: DataFrame, tag: String): DataFrame =
       if (files.isEmpty) emptyTagged
@@ -3041,14 +3070,15 @@ object ManifestTable {
     *
     * Cost: O(versions in window) manifest reads; data volume = added
     * files + vector-diff-referenced files only. Nothing table-sized. */
-  def readChangesRowTracked(
+  private[graft] def readChangesRowTracked(
       spark: SparkSession,
       root: String,
       sinceVersion: Long,
       untilVersion: Option[Long] = None,
-      includeRowId: Boolean = false): (DataFrame, Long) = {
+      includeRowId: Boolean = false,
+      listed: Option[Seq[Long]] = None): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.{broadcast, lit, struct, when, max => fmax, min => fmin}
-    val vs = versions(spark, root)
+    val vs = listed.getOrElse(versions(spark, root))
     refuse(vs.contains(sinceVersion),
       s"version $sinceVersion not in log (have ${vs.mkString(",")}) — cursor invalid, full refresh required")
     val tip = untilVersion.getOrElse(vs.max)
@@ -3160,7 +3190,7 @@ object ManifestTable {
     val outCols: Seq[String] =
       if (includeRowId) "_row_id" +: outFields else outFields
     val emptyFeed = {
-      val base = read(spark, root, Some(tip)).limit(0)
+      val base = readAt(spark, root, tip).limit(0)
       val withId = if (includeRowId)
         base.withColumn("_row_id", lit(null).cast("long")) else base
       withId.select((outCols.map(col) :+ lit("insert").as(ct)).map(c => c): _*)
@@ -3780,7 +3810,7 @@ object ManifestTable {
   }
 
   /** Apply one keyed CDC batch — rows tagged `_change_type` ∈
-    * ('insert' | 'delete') by key, the [[readChangesWithDeletes]] /
+    * ('insert' | 'delete') by key, the [[readChanges]] /
     * change-feed-source shape — in ONE atomic commit: delete keys land
     * as positions in the cumulative deletion vector (a merge-on-read
     * delete — ZERO data files rewritten), insert rows stage as appended

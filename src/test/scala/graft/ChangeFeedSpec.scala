@@ -285,4 +285,69 @@ class ChangeFeedSpec extends SparkSpec {
         s"expected the rewrite refusal, got: ${chain(e)}")
     } finally q.stop()
   }
+
+  test("readChanges: across a compact a row-tracked table reads an empty delta, an untracked one refuses") {
+    val tracked = freshRoot("rc_compact_tr")
+    val plain = freshRoot("rc_compact_pl")
+    val f = orders.filter(col("o_orderstatus") === "F").repartition(3)
+    ManifestTable.create(spark, tracked, f)
+    ManifestTable.create(spark, plain, f)
+    ManifestTable.enableRowTracking(spark, tracked)
+    val cTracked = ManifestTable.versions(spark, tracked).max
+    val cPlain = ManifestTable.versions(spark, plain).max
+    ManifestTable.compact(spark, tracked, 64L * 1024 * 1024)
+    ManifestTable.compact(spark, plain, 64L * 1024 * 1024)
+    val (feed, tip) = ManifestTable.readChanges(spark, tracked, cTracked)
+    assert(tip === ManifestTable.versions(spark, tracked).max)
+    assert(feed.count() === 0, "an id-preserving rewrite must be an empty delta")
+    val e = intercept[graft.sources.NotDeltaExpressible] {
+      ManifestTable.readChanges(spark, plain, cPlain)
+    }
+    assert(e.getMessage.contains("full refresh"), e.getMessage)
+  }
+
+  test("readChanges: a cursor vacuumed past refuses with NotDeltaExpressible, tracked or not") {
+    Seq(true, false).foreach { track =>
+      val root = freshRoot("rc_vacuum")
+      ManifestTable.create(spark, root, orders.filter(col("o_orderstatus") === "F"))
+      if (track) ManifestTable.enableRowTracking(spark, root)
+      val cursor = ManifestTable.versions(spark, root).max
+      ManifestTable.append(spark, root, orders.filter(col("o_orderstatus") === "O").limit(10))
+      ManifestTable.append(spark, root, orders.filter(col("o_orderstatus") === "O").limit(5))
+      ManifestTable.vacuum(spark, root, keepVersions = 1)
+      assert(!ManifestTable.versions(spark, root).contains(cursor))
+      val e = intercept[graft.sources.NotDeltaExpressible] {
+        ManifestTable.readChanges(spark, root, cursor)
+      }
+      assert(e.getMessage.contains("full refresh"), s"tracked=$track: ${e.getMessage}")
+    }
+  }
+
+  test("readChanges: includeRowId on an untracked table fails loudly") {
+    val root = freshRoot("rc_rowid")
+    ManifestTable.create(spark, root, orders.limit(20))
+    val cursor = ManifestTable.versions(spark, root).max
+    ManifestTable.append(spark, root, orders.limit(5))
+    val e = intercept[IllegalArgumentException] {
+      ManifestTable.readChanges(spark, root, cursor, includeRowId = true)
+    }
+    assert(e.getMessage.contains("row tracking"), e.getMessage)
+  }
+
+  test("readChanges: one call lists the log once, tracked or not") {
+    Seq(true, false).foreach { track =>
+      val root = freshRoot("rc_listing")
+      ManifestTable.create(spark, root, orders.filter(col("o_orderstatus") === "F"))
+      if (track) ManifestTable.enableRowTracking(spark, root)
+      val cursor = ManifestTable.versions(spark, root).max
+      ManifestTable.append(spark, root, orders.filter(col("o_orderstatus") === "O"))
+      ManifestTable.deleteMor(spark, root, col("o_orderkey") % 3 === 0)
+      val tip = ManifestTable.versions(spark, root).max
+      val before = ManifestTable.listingsOf(root)
+      val (feed, consumed) = ManifestTable.readChanges(spark, root, cursor, Some(tip))
+      assert(ManifestTable.listingsOf(root) - before === 1, s"tracked=$track")
+      assert(consumed === tip)
+      assert(feed.filter(col(ct) === "delete").count() > 0)
+    }
+  }
 }

@@ -238,16 +238,16 @@ class ConcurrencySpec extends SparkSpec {
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, src, f)
     // bootstrap, then advance the source so there is a window to race on
-    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     ManifestTable.append(spark, src, orders.filter(col("o_orderstatus") === "O"))
     // two maintenance daemons fire at once (same writerId — the
     // exactly-once watermark makes the second application a no-op even
     // when both survive the race)
     race(
       () => { graft.ops.LakeOps.maintainAggMartTotal(
-        spark, src, mart, "o_orderstatus", "o_totalprice"); () },
+        spark, src, mart, Seq("o_orderstatus"), "o_totalprice"); () },
       () => { graft.ops.LakeOps.maintainAggMartTotal(
-        spark, src, mart, "o_orderstatus", "o_totalprice"); () })
+        spark, src, mart, Seq("o_orderstatus"), "o_totalprice"); () })
     val maintained = ManifestTable.read(spark, mart)
       .select(col("o_orderstatus"), col("n_rows"), col("total").cast("double"))
     val rebuild = ManifestTable.read(spark, src).groupBy("o_orderstatus")

@@ -284,7 +284,7 @@ class LakeOpsSpec extends SparkSpec {
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, src, f)
     ManifestTable.enableRowTracking(spark, src)
-    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     // a window lake11's maintainer must full-refresh on: MOR delete,
     // MERGE upsert (reprice + O inserts), and a full COMPACT
     ManifestTable.deleteMor(spark, src, col("o_custkey") % 5 === 0)
@@ -295,7 +295,7 @@ class LakeOpsSpec extends SparkSpec {
     ManifestTable.merge(spark, src, updates, "o_orderkey")
     ManifestTable.compact(spark, src, 64L * 1024 * 1024)
     val (tip, _) = graft.ops.LakeOps.maintainAggMartTotal(
-      spark, src, mart, "o_orderstatus", "o_totalprice")
+      spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     def snap(df: org.apache.spark.sql.DataFrame) = df
       .select(col("o_orderstatus"), col("n_rows"), col("total").cast("double"))
       .as[(String, Long, Double)].collect().toSet
@@ -308,11 +308,11 @@ class LakeOpsSpec extends SparkSpec {
     // caught up: no commit; crash replay of the same window: no-op
     val before = ManifestTable.versions(spark, mart).max
     assert(graft.ops.LakeOps.maintainAggMartTotal(
-      spark, src, mart, "o_orderstatus", "o_totalprice") === ((tip, 0L)))
+      spark, src, mart, Seq("o_orderstatus"), "o_totalprice") === ((tip, 0L)))
     assert(ManifestTable.versions(spark, mart).max === before)
     // a group emptied entirely vanishes from the mart (rebuild parity)
     ManifestTable.deleteMor(spark, src, col("o_orderstatus") === "O")
-    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     assert(ManifestTable.read(spark, mart)
       .filter(col("o_orderstatus") === "O").count() === 0,
       "a zero-count group must leave the mart")
@@ -331,7 +331,7 @@ class LakeOpsSpec extends SparkSpec {
     val src = root(); val mart = root()
     val orders = Tables.load(spark, "/root/testdata/sf0.001", "orders")
     val keys = Seq("o_orderstatus", "o_orderpriority")
-    def maintain() = graft.ops.LakeOps.maintainAggMartKeys(
+    def maintain() = graft.ops.LakeOps.maintainAggMartTotal(
       spark, src, mart, keys, "o_totalprice")
     ManifestTable.create(spark, src, orders.filter(col("o_orderstatus") === "F"))
     maintain()
@@ -466,6 +466,63 @@ class LakeOpsSpec extends SparkSpec {
     assert(mirrorEquals())
   }
 
+  test("maintainer bootstraps scan their source once") {
+    import graft.sources.ManifestTable
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    import org.apache.spark.sql.util.QueryExecutionListener
+    def root() = java.nio.file.Files.createTempDirectory("boot").toString
+    val s = spark.newSession()
+    val orders = Tables.load(s, "/root/testdata/sf0.001", "orders")
+    val cust = Tables.load(s, "/root/testdata/sf0.001", "customer")
+    val src = root(); val dim = root()
+    ManifestTable.create(s, src, orders)
+    ManifestTable.create(s, dim, cust)
+    val n = orders.count()
+    val joinRows = orders.join(cust, col("o_custkey") === col("c_custkey")).count()
+    // SQL executions whose plan reads a file under the source root
+    val scans = new java.util.concurrent.atomic.AtomicInteger()
+    def readsSrc(qe: QueryExecution): Boolean = qe.analyzed.collectFirst {
+      case lr: LogicalRelation if (lr.relation match {
+        case fsr: HadoopFsRelation =>
+          fsr.location.rootPaths.exists(_.toUri.getPath.startsWith(src + "/"))
+        case _ => false
+      }) => ()
+    }.isDefined
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (readsSrc(qe)) scans.incrementAndGet()
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        if (readsSrc(qe)) scans.incrementAndGet()
+    }
+    def sourceScans(body: => Unit): Int = {
+      org.apache.spark.SpecListeners.drain(s.sparkContext)
+      val before = scans.get
+      body
+      org.apache.spark.SpecListeners.drain(s.sparkContext)
+      scans.get - before
+    }
+    s.listenerManager.register(listener)
+    try {
+      assert(sourceScans {
+        assert(graft.ops.LakeOps.maintainMirror(s, src, root(), "o_orderkey") ===
+          ((1L, "bootstrap", n)))
+      } === 1, "mirror bootstrap")
+      assert(sourceScans {
+        assert(graft.ops.LakeOps.maintainAggMartTotal(s, src, root(),
+          Seq("o_orderstatus", "o_orderpriority"), "o_totalprice") === ((1L, n)))
+      } === 1, "composite-key agg mart bootstrap")
+      assert(sourceScans {
+        assert(graft.ops.LakeOps.maintainMinMaxMart(s, src, root(),
+          "o_orderstatus", "o_totalprice") === ((1L, n, 0L)))
+      } === 1, "min/max mart bootstrap")
+      assert(sourceScans {
+        assert(graft.ops.LakeOps.maintainJoinMart(s, src, dim, root(),
+          "o_custkey", "c_custkey") === ((1L, 1L, joinRows)))
+      } === 1, "join mart bootstrap")
+    } finally s.listenerManager.unregister(listener)
+  }
+
   test("maintainAggMartTotal untracked: append+MOR-delete windows maintain; a MERGE window demands tracking") {
     import graft.sources.ManifestTable
     def root() = java.nio.file.Files.createTempDirectory("ivmt2").toString
@@ -473,10 +530,10 @@ class LakeOpsSpec extends SparkSpec {
     val orders = Tables.load(spark, "/root/testdata/sf0.001", "orders")
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, src, f) // NOT row-tracked
-    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     ManifestTable.append(spark, src, orders.filter(col("o_orderstatus") === "O"))
     ManifestTable.deleteMor(spark, src, col("o_orderkey") % 3 === 0)
-    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+    graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     val expect = orders.filter(col("o_orderstatus") isin ("F", "O"))
       .filter(col("o_orderkey") % 3 =!= 0).count()
     assert(ManifestTable.read(spark, mart)
@@ -486,7 +543,7 @@ class LakeOpsSpec extends SparkSpec {
       f.filter(col("o_orderkey") % 3 =!= 0).limit(5)
         .withColumn("o_totalprice", col("o_totalprice") + 1.0), "o_orderkey")
     val e = intercept[graft.sources.NotDeltaExpressible] {
-      graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     }
     assert(e.getMessage.contains("full refresh"), e.getMessage)
   }

@@ -36,7 +36,7 @@ class MartRewriteSpec extends SparkSpec {
     // ground truth BEFORE registering: the plain fact-scan aggregate
     val direct = factAgg(fact).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val q = factAgg(fact)
       val martName = new java.io.File(mart).getName
@@ -55,7 +55,7 @@ class MartRewriteSpec extends SparkSpec {
     val mart = freshRoot("mv_mart2")
     ManifestTable.create(spark, fact, orders)
     LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
       def untouched(df: org.apache.spark.sql.DataFrame, what: String): Unit =
@@ -87,7 +87,7 @@ class MartRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n_orders"), ExactSums.dsum(col("o_totalprice")).as("total_price"))
     val direct = keyFiltered.collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val q = keyFiltered
       val martName = new java.io.File(mart).getName
@@ -134,7 +134,7 @@ class MartRewriteSpec extends SparkSpec {
         "sum shapes must not route to the minmax mart")
       // with BOTH marts registered, each shape routes to its own mart
       LakeOps.maintainAggMart(spark, fact, sumMart, "o_orderstatus", "o_totalprice")
-      MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", sumMart)
+      MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", sumMart)
       val sumName = new java.io.File(sumMart).getName
       assert(scansUnder(sumAgg).exists(_.contains(sumName)),
         s"count/dsum must scan the sum mart:\n${sumAgg.queryExecution.executedPlan}")
@@ -152,7 +152,7 @@ class MartRewriteSpec extends SparkSpec {
     val fact = freshRoot("mv_fact_ck")
     val mart = freshRoot("mv_mart_ck")
     ManifestTable.create(spark, fact, orders)
-    LakeOps.maintainAggMartKeys(spark, fact, mart,
+    LakeOps.maintainAggMartTotal(spark, fact, mart,
       Seq("o_orderstatus", "o_orderpriority"), "o_totalprice")
     // grouping order REVERSED vs registration — sets match, order must not matter
     def q = ManifestTable.read(spark, fact)
@@ -161,7 +161,7 @@ class MartRewriteSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), ExactSums.dsum(col("o_totalprice")).as("s"))
     val direct = q.collect().map(r =>
       (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3))).toSet
-    MartRewrite.registerKeys(spark, fact,
+    MartRewrite.register(spark, fact,
       Seq("o_orderstatus", "o_orderpriority"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
@@ -200,7 +200,7 @@ class MartRewriteSpec extends SparkSpec {
     ManifestTable.create(spark, fact, f) // v1
     ManifestTable.append(spark, fact, orders.filter(col("o_orderstatus") =!= "F")) // v2
     LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
       // a TIME-TRAVEL read at v1 scans a PROPER SUBSET of the
@@ -236,7 +236,7 @@ class MartRewriteSpec extends SparkSpec {
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, fact, f)
     LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       // new fact data, mart NOT maintained: the rewrite serves the
       // registered snapshot (the documented allowed-staleness model)
@@ -245,7 +245,7 @@ class MartRewriteSpec extends SparkSpec {
       assert(stale === Map("F" -> f.count()), s"expected the snapshot, got $stale")
       // maintain + re-register: fresh again
       LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
-      MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+      MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       val fresh = factAgg(fact).collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(fresh === Map("F" -> f.count(),
         "O" -> orders.filter(col("o_orderstatus") === "O").count()))
@@ -257,7 +257,7 @@ class MartRewriteSpec extends SparkSpec {
     val mart = freshRoot("mv_mart_avg")
     ManifestTable.create(spark, fact, orders)
     LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
-    MartRewrite.register(spark, fact, "o_orderstatus", "o_totalprice", mart)
+    MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
       def shaped(df: org.apache.spark.sql.DataFrame) = df.groupBy("o_orderstatus")
