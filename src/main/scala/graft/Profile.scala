@@ -33,7 +33,6 @@ object Profile {
     val mode = if (args.length > 2) args(2) else "all"
 
     if (mode == "dd11") {
-      graft.ops.LakeOps.LogWindowPhases = true
       profileDd11(spark, sfDir, repeat); spark.stop(); return
     }
 

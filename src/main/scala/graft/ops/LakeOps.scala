@@ -30,16 +30,6 @@ object LakeOps {
     * Var so specs can force reclusters on small corpora. */
   private[graft] var ReclusterFileThreshold: Int = 64
 
-  /** Phase-timing hook for the maintainers (Profile-only, off in
-    * production): when set, maintenance-window phases print wall
-    * seconds — the measurement the fixed-cost work rides on. */
-  private[graft] var LogWindowPhases: Boolean = false
-  private def phase[T](what: String)(body: => T): T =
-    if (!LogWindowPhases) body else {
-      val t0 = System.nanoTime(); val out = body
-      println(f"[lakeops] $what: ${(System.nanoTime() - t0) / 1e9}%.3f s"); out
-    }
-
   /** Target bytes per file a recluster writes — the width grows with
     * the mart, which is what makes the doubling trigger geometric. */
   private[graft] var ReclusterTargetFileBytes: Long = 128L * 1024 * 1024
@@ -1362,44 +1352,43 @@ object LakeOps {
           val bound = if (lead > cursor) Some(lead) else None
           val (newDocs0, newTip) =
             ManifestTable.readChangesSince(spark, docsRoot, cursor, bound)
-          val newDocs = phase("w:newDocs ckpt")(newDocs0.localCheckpoint())
-          val nDocs = phase("w:count")(newDocs.count())
+          val newDocs = newDocs0.localCheckpoint()
+          val nDocs = newDocs.count()
           val idxTip = idxVs.max
-          val newEx = phase("w:newEx ckpt")(explodedOf(newDocs).localCheckpoint())
+          val newEx = explodedOf(newDocs).localCheckpoint()
           // which batch shingles CROSS the cap this window: old df from a
           // pruned index probe, batch increments from the batch itself
           // checkpointed: consumed four times (probe0's key set, df0's
           // join, the crosser filter, dfPrime) — each use would re-run
           // the groupBy shuffle over newEx otherwise
-          val bc = phase("w:bc ckpt")(
-            newEx.groupBy("shingle").agg(count(lit(1)).as("__bc")).localCheckpoint())
-          val probe0 = phase("w:probe0 plan")(ManifestTable.readPrunedByKeys(spark, indexRoot, "shingle",
+          val bc = newEx.groupBy("shingle").agg(count(lit(1)).as("__bc")).localCheckpoint()
+          val probe0 = ManifestTable.readPrunedByKeys(spark, indexRoot, "shingle",
             bc.select("shingle"), version = Some(idxTip), keysDistinct = true)
-            .join(bc.select("shingle"), Seq("shingle"), "left_semi"))
+            .join(bc.select("shingle"), Seq("shingle"), "left_semi")
           val df0 = probe0.groupBy("shingle").agg(count(lit(1)).as("__df0"))
           val crossers0 = bc.join(df0, Seq("shingle"), "left")
             .na.fill(0L, Seq("__df0"))
             .filter(col("__df0") <= cap && col("__df0") + col("__bc") > cap)
             .select("shingle")
-          val crossers = phase("w:crossers ckpt")(crossers0.localCheckpoint())
+          val crossers = crossers0.localCheckpoint()
           val affectedOldIds = probe0.join(crossers, Seq("shingle"), "left_semi")
             .select("doc_id").distinct()
           // affected docs' full shingle sets: old ones re-read from the
           // docs table (pruned by id when stats allow), new ones in hand
-          val oldAffDocs = phase("w:oldAffDocs plan")(ManifestTable.readPrunedByKeys(spark, docsRoot, idCol,
+          val oldAffDocs = ManifestTable.readPrunedByKeys(spark, docsRoot, idCol,
             affectedOldIds.withColumnRenamed("doc_id", idCol), version = Some(newTip),
-            keysDistinct = true))
+            keysDistinct = true)
             .join(affectedOldIds.withColumnRenamed("doc_id", idCol),
               Seq(idCol), "left_semi")
-          val affEx = phase("w:affEx ckpt")(explodedOf(oldAffDocs.unionByName(newDocs)).localCheckpoint())
-          val affectedIds = phase("w:affectedIds ckpt")(affEx.select("doc_id").distinct().localCheckpoint())
+          val affEx = explodedOf(oldAffDocs.unionByName(newDocs)).localCheckpoint()
+          val affectedIds = affEx.select("doc_id").distinct().localCheckpoint()
           val universe = affEx.select("shingle").distinct()
           // NEW frequency landscape for every shingle an affected doc
           // carries: rows already indexed + this batch's rows
-          val probeU = phase("w:probeU plan+ckpt")(ManifestTable.readPrunedByKeys(spark, indexRoot, "shingle",
+          val probeU = ManifestTable.readPrunedByKeys(spark, indexRoot, "shingle",
             universe, version = Some(idxTip), keysDistinct = true)
             .join(universe, Seq("shingle"), "left_semi")
-            .select("doc_id", "shingle").localCheckpoint())
+            .select("doc_id", "shingle").localCheckpoint()
           val dfPrime = universe
             .join(probeU.groupBy("shingle").agg(count(lit(1)).as("__old")),
               Seq("shingle"), "left")
@@ -1409,8 +1398,7 @@ object LakeOps {
           // checkpointed: three consumers (affSurv twice through
           // affSizes/shared, rowsU once) would each re-run the
           // probeU-groupBy + bc join chain otherwise
-          val surviving = phase("w:surviving ckpt")(
-            dfPrime.filter(col("__df") <= cap).select("shingle").localCheckpoint())
+          val surviving = dfPrime.filter(col("__df") <= cap).select("shingle").localCheckpoint()
           val affSurv = affEx.select("doc_id", "shingle")
             .join(surviving, Seq("shingle"), "left_semi")
           val rowsU = probeU.unionByName(newEx.select("doc_id", "shingle"))
@@ -1420,22 +1408,21 @@ object LakeOps {
             .join(affectedIds, Seq("doc_id"), "right")
             .na.fill(0L, Seq("n_sh"))
             .select("doc_id", "n_sh")
-          val affSizes = phase("w:affSizes ckpt")(affSizes0.localCheckpoint())
+          val affSizes = affSizes0.localCheckpoint()
           // candidate pairs: affected × (docs sharing a surviving
           // shingle); countDistinct collapses the double emission of
           // both-affected pairs. Checkpointed: the window's most
           // expensive join would otherwise run THREE times — once for
           // the endpoint key-collect (oldSizes' probe), once inside
           // freshPairs, and the probe's own plan
-          val shared = phase("w:shared ckpt")(
-            affSurv.select(col("doc_id").as("__a"), col("shingle"))
+          val shared = affSurv.select(col("doc_id").as("__a"), col("shingle"))
             .join(rowsU.select(col("doc_id").as("__b"), col("shingle")), Seq("shingle"))
             .filter(col("__a") =!= col("__b"))
             .select(least(col("__a"), col("__b")).as("doc_a"),
               greatest(col("__a"), col("__b")).as("doc_b"), col("shingle"))
             .groupBy("doc_a", "doc_b")
             .agg(countDistinct(col("shingle")).as("shared_shingles"))
-            .localCheckpoint())
+            .localCheckpoint()
           // denominators: fresh sizes for affected endpoints, the sizes
           // mart (pruned probe) for unaffected ones — an unaffected
           // doc's capped size is unchanged by construction
@@ -1443,8 +1430,8 @@ object LakeOps {
             .unionByName(shared.select(col("doc_b").as("doc_id"))).distinct()
           val unaffectedNeeded = endpointIds.join(affectedIds, Seq("doc_id"), "left_anti")
           val sizesTip = tipOf(spark, sizesRoot)
-          val oldSizes = phase("w:oldSizes plan")(ManifestTable.readPrunedByKeys(spark, sizesRoot, "doc_id",
-            unaffectedNeeded, version = Some(sizesTip), keysDistinct = true))
+          val oldSizes = ManifestTable.readPrunedByKeys(spark, sizesRoot, "doc_id",
+            unaffectedNeeded, version = Some(sizesTip), keysDistinct = true)
             .join(unaffectedNeeded, Seq("doc_id"), "left_semi")
             .select("doc_id", "n_sh")
           val lookup = affSizes.unionByName(oldSizes)
@@ -1456,7 +1443,7 @@ object LakeOps {
             .withColumn("jaccard", round(col("shared_shingles").cast("double") /
               (col("__na") + col("__nb") - col("shared_shingles")), 4))
             .filter(col("shared_shingles") >= minShared && col("jaccard") >= minJaccard)
-          val freshPairs = phase("w:freshPairs ckpt")(withPairKey(fresh).localCheckpoint())
+          val freshPairs = withPairKey(fresh).localCheckpoint()
           // retract EVERY mart pair touching an affected doc (its fresh
           // truth — possibly absence — is in freshPairs)
           val pairsTip = tipOf(spark, pairsRoot)
@@ -1466,8 +1453,8 @@ object LakeOps {
               keysDistinct = true)
               .join(affectedIds.withColumnRenamed("doc_id", kc), Seq(kc), "left_semi")
               .select("pair_key")
-          val delKeys = phase("w:delKeys ckpt")(touchedBy("doc_a").unionByName(touchedBy("doc_b"))
-            .distinct().localCheckpoint())
+          val delKeys = touchedBy("doc_a").unionByName(touchedBy("doc_b"))
+            .distinct().localCheckpoint()
           val pairsSchema = freshPairs.schema
           def nullFeed(keys: DataFrame, keyName: String): DataFrame =
             keys.select(pairsSchema.fields.map(f =>
@@ -1484,9 +1471,9 @@ object LakeOps {
           // read BEFORE applying: a pre-crash apply means this window's
           // fresh pairs were already reported once
           val pairsPreApplied = watermarkOf(pairsRoot).exists(_ >= newTip)
-          phase("w:apply pairs")(ManifestTable.applyChangesMor(spark, pairsRoot, pairsFeed, "pair_key",
+          ManifestTable.applyChangesMor(spark, pairsRoot, pairsFeed, "pair_key",
             writerId, batchId = newTip, statsColumns = Seq("doc_a", "doc_b"),
-            feedTags = Some(Set("insert", "delete"))))
+            feedTags = Some(Set("insert", "delete")))
           val sizesSchema = affSizes.schema
           val sizesFeed = affectedIds.select(sizesSchema.fields.map(f =>
               (if (f.name == "doc_id") col("doc_id") else lit(null))
@@ -1494,12 +1481,12 @@ object LakeOps {
             .withColumn(ct, lit("delete"))
             .unionByName(sizedByRange(affSizes, affSizes.count(), "doc_id")
               .withColumn(ct, lit("insert")))
-          phase("w:apply sizes")(ManifestTable.applyChangesMor(spark, sizesRoot, sizesFeed, "doc_id",
+          ManifestTable.applyChangesMor(spark, sizesRoot, sizesFeed, "doc_id",
             writerId, batchId = newTip, statsColumns = Seq("doc_id"),
-            feedTags = Some(Set("insert", "delete"))))
-          phase("w:append index")(ManifestTable.appendIdempotent(spark, indexRoot,
+            feedTags = Some(Set("insert", "delete")))
+          ManifestTable.appendIdempotent(spark, indexRoot,
             sizedByRange(newEx, newEx.count(), "shingle"), writerId, batchId = newTip,
-            statsColumns = Seq("shingle")))
+            statsColumns = Seq("shingle"))
           // clustering-decay control, AFTER the window's ladder completes
           // (the watermark ladder's crash replay is untouched — a
           // recluster is content-identical, one atomic overwrite, and
@@ -1512,11 +1499,9 @@ object LakeOps {
           // count falls back to the shuffle width, so the amortized cost
           // per window is O(mart / windows-between-reclusters) — the LSM
           // compaction economics, metered by the spec.
-          phase("w:recluster x3") {
-            reclusterIfNeeded(spark, pairsRoot, "doc_a", Seq("doc_a", "doc_b"))
-            reclusterIfNeeded(spark, sizesRoot, "doc_id", Seq("doc_id"))
-            reclusterIfNeeded(spark, indexRoot, "shingle", Seq("shingle"))
-          }
+          reclusterIfNeeded(spark, pairsRoot, "doc_a", Seq("doc_a", "doc_b"))
+          reclusterIfNeeded(spark, sizesRoot, "doc_id", Seq("doc_id"))
+          reclusterIfNeeded(spark, indexRoot, "shingle", Seq("shingle"))
           consumed = newTip
           totDocs += nDocs
           if (!pairsPreApplied) totPairs += nPairs

@@ -336,20 +336,6 @@ object ManifestTable {
     finally in.close()
   }
 
-  /** The FULL manifest text of `version` — resolving through the tiered
-    * log's delta chain when the stored form is a delta (see
-    * [[composeTiered]]). Text is rendered from the structural state on
-    * demand and cached; most consumers go through [[parsedAt]] and never
-    * need it. Every consumer above this point (files, meta, stats, ops,
-    * history, CDF, streams) is delta-oblivious. */
-  private def manifestText(spark: SparkSession, root: String, version: Long): String = {
-    val raw = rawText(spark, root, version)
-    if (!isDelta(raw) && !isSegmented(raw)) raw
-    else resolvedCached(root, version) {
-      renderParsed(parsedAt(spark, root, version))
-    }
-  }
-
   /** Resolve `version`'s FULL structural state from DISK: walk back to
     * the nearest full snapshot (or vacuum-materialized `.checkpoint`
     * sidecar), parse it ONCE, then apply the delta chain structurally —
@@ -413,15 +399,12 @@ object ManifestTable {
 
   /** The structural state of `version` — the accessor [[manifestFiles]]/
     * [[manifestMeta]]/[[rawStats]] read through, LRU-cached so hot-tip
-    * reads and commits never re-parse O(files) text. Immutable after
-    * publish like the text cache; [[invalidateVersion]] drops entries
-    * when vacuum deletes a version's manifest. */
+    * reads and commits never re-parse O(files) text (and never re-decode
+    * its meta and stats, which the state holds). Immutable after
+    * publish; [[invalidateVersion]] drops entries when vacuum deletes a
+    * version's manifest. */
   private def parsedAt(spark: SparkSession, root: String, version: Long): Parsed =
-    stateCache.getOrCompute(root, version) {
-      val txt = resolvedCache.get(root, version)
-      if (txt != null) parseFull(txt)
-      else resolveParsedRetrying(spark, root, version)
-    }
+    stateCache.getOrCompute(root, version)(resolveParsedRetrying(spark, root, version))
 
   /** [[resolveParsedFromDisk]] with a bounded re-read for the in-flight
     * window: through a claim arm whose byte copy is not atomically
@@ -540,7 +523,9 @@ object ManifestTable {
     * which needs version-1 of ITS root resident), and roots bounded
     * globally (so long-lived JVMs cycling through many temp tables
     * don't leak). Entries are immutable after publish; eviction is pure
-    * cost, never staleness. */
+    * cost, never staleness. Three instances, one per concern: resident
+    * states ([[stateCache]]), segment files ([[segmentCache]]) and cold
+    * overlays ([[coldOverlayCache]]). */
   private final class PerRootLru[V](perRoot: Int, maxRoots: Int) {
     private val roots =
       new java.util.LinkedHashMap[String, java.util.LinkedHashMap[String, V]](16, 0.75f, true) {
@@ -583,70 +568,35 @@ object ManifestTable {
     }
   }
 
-  /** Resolved-text LRU — manifests are immutable after publish, so
-    * (root, version) keys never go stale; the cache just spares the
-    * repeated chain walks of hot tips. */
-  private val resolvedCache = new PerRootLru[String](4, 64)
-
-  /** Structural-state LRU beside [[resolvedCache]]: the parsed accessors
+  /** The resident-state LRU: ONE entry per (root, version), the
+    * version's [[Parsed]] state with its decoded meta, decoded stats
+    * and prune index riding inside it. The parsed accessors
     * ([[manifestFiles]]/[[manifestMeta]]/[[rawStats]]) and the writer's
     * incremental compose read through it, so hot-tip commits and reads
-    * parse each version's O(files) state at most once per JVM. The
-    * per-root bound keeps the tip and its base resident on EVERY hot
-    * table, so the checkpoint divergence gate always has a cached
-    * version-1 state to verify. */
+    * parse and decode each version's O(files) state at most once per
+    * JVM. The per-root bound keeps the tip and its base resident on
+    * EVERY hot table, so the checkpoint divergence gate always has a
+    * cached version-1 state to verify. */
   private val stateCache = new PerRootLru[Parsed](8, 64)
-
-  /** Parsed per-file stats LRU ([[rawStats]]' decode of a version's
-    * stats lines) — the incremental compose compares FileStats structs
-    * against this to find changed lines without serializing O(files). */
-  private val statsMapCache = new PerRootLru[Map[String, ManifestStats.FileStats]](4, 64)
-
-  /** Decoded meta-map LRU beside [[statsMapCache]]: [[manifestMeta]] is
-    * called several times per commit (txn carry, carried-key filter,
-    * schema reads), and re-splitting every meta line each call is
-    * O(meta) string work per read — O(files) of it on row-tracked
-    * tables, whose `rowbase-*` entries scale with file count. */
-  private val metaMapCache = new PerRootLru[Map[String, String]](8, 64)
-
-  private def metaMapOf(root: String, version: Long, p: Parsed): Map[String, String] =
-    metaMapCache.getOrCompute(root, version) {
-      p.metaLines.valuesIterator
-        .map(_.stripPrefix(MetaPrefix).split("=", 2))
-        .collect { case Array(k, v) => k -> v }
-        .toMap
-    }
 
   /** Drop every in-JVM cache entry for (root, version) — called when a
     * manifest is DELETED from disk (vacuum), so same-JVM reads of a
     * dropped version fail like a fresh process's would instead of being
     * served from a cache for a version that no longer exists. */
   private def invalidateVersion(root: String, version: Long): Unit = {
-    resolvedCache.remove(root, version)
     stateCache.remove(root, version)
-    statsMapCache.remove(root, version)
-    metaMapCache.remove(root, version)
-    pruneIndexCache.remove(root, version)
     coldOverlayCache.remove(root, version)
   }
 
-  /** Test hook: drop EVERY in-JVM manifest cache (resolved text,
-    * structural state, decoded stats/meta, segment files) to simulate a
-    * fresh process — a cold JVM resolving a vacuumed tip must go
-    * through the on-disk .checkpoint sidecar, not an in-memory
-    * leftover. */
+  /** Test hook: drop EVERY in-JVM manifest cache (resident states,
+    * segment files, cold overlays) to simulate a fresh process — a cold
+    * JVM resolving a vacuumed tip must go through the on-disk
+    * .checkpoint sidecar, not an in-memory leftover. */
   private[graft] def dropResolvedCacheForTest(): Unit = {
-    resolvedCache.clear()
     stateCache.clear()
-    statsMapCache.clear()
-    metaMapCache.clear()
     segmentCache.clear()
-    pruneIndexCache.clear()
     coldOverlayCache.clear()
   }
-
-  private def resolvedCached(root: String, version: Long)(compute: => String): String =
-    resolvedCache.getOrCompute(root, version)(compute)
 
   /** Structural pieces of a FULL manifest text (raw lines preserved so
     * re-rendering is byte-exact). `statsLines` is a plain hash map —
@@ -654,15 +604,71 @@ object ManifestTable {
     * make every per-file lookup O(files) (an O(files²) render at 10M
     * entries). The second parameter list rides OUTSIDE equality:
     * `segSource` is the storage-layout detail (which two-tier segment
-    * files this state's entries came from — see [[composeSegmented]]),
-    * never part of the semantic state the divergence gate compares. */
+    * files this state's entries came from, or may reuse — see
+    * [[composeSegmented]]),
+    * never part of the semantic state the divergence gate compares;
+    * `composedMeta`/`composedStats` are the decoded maps a compose
+    * already built for these lines, so a committed version's maps are
+    * never decoded again. The decoded views below are computed once,
+    * on first use, and live as long as the state stays resident. */
   private final case class Parsed(
       header: String,
       metaLines: Map[String, String], // meta key -> full "# meta:..." line
       statsLines: Map[String, String], // stats path -> full line
       files: Vector[String])(
       val segSource: Option[Vector[Segment]],
-      val segTracking: Option[SegTracking] = None)
+      val segTracking: Option[SegTracking] = None,
+      val composedMeta: Option[Map[String, String]] = None,
+      val composedStats: Option[Map[String, ManifestStats.FileStats]] = None) {
+
+    /** Decoded meta lines: [[manifestMeta]] is called several times per
+      * commit (txn carry, carried-key filter, schema reads), and
+      * re-splitting every meta line each call is O(meta) string work —
+      * O(files) of it on row-tracked tables, whose `rowbase-*` entries
+      * scale with file count. */
+    lazy val metaMap: Map[String, String] = composedMeta.getOrElse(
+      metaLines.valuesIterator
+        .map(_.stripPrefix(MetaPrefix).split("=", 2))
+        .collect { case Array(k, v) => k -> v }
+        .toMap)
+
+    /** Decoded stats lines, the table rollup included — the incremental
+      * compose compares FileStats structs against this to find changed
+      * lines without serializing O(files). */
+    lazy val statsMap: Map[String, ManifestStats.FileStats] = composedStats.getOrElse(
+      statsLines.valuesIterator
+        .map(l => ManifestStats.deserialize(l.stripPrefix(StatsPrefix)))
+        .toMap)
+
+    /** The plan-tier grouping of a SEGMENTED state (see [[PruneIndex]]);
+      * None when the state names no segments. */
+    lazy val pruneIndex: Option[PruneIndex] = segSource.filter(_.nonEmpty).map { segs =>
+      val fileSet = files.toSet
+      val covered = new java.util.HashSet[String]()
+      val groups = Vector.newBuilder[(Option[ManifestStats.FileStats], Vector[String])]
+      segs.foreach { s =>
+        val live = s.members.filter(fileSet.contains)
+        live.foreach(covered.add)
+        if (live.nonEmpty) {
+          val rollupValid = s.rollup.isDefined &&
+            live.forall(m => statsLines.get(m) == s.stats.get(m))
+          groups += ((if (rollupValid) s.rollup else None, live))
+        }
+      }
+      val tail = files.filterNot(covered.contains)
+      if (tail.nonEmpty) groups += ((None, tail))
+      PruneIndex(groups.result())
+    }
+
+    /** The same lines under another storage layout or with other
+      * composed maps; unnamed parts carry over. */
+    def relaid(segSource: Option[Vector[Segment]] = segSource,
+        segTracking: Option[SegTracking] = segTracking,
+        composedMeta: Option[Map[String, String]] = composedMeta,
+        composedStats: Option[Map[String, ManifestStats.FileStats]] = composedStats): Parsed =
+      Parsed(header, metaLines, statsLines, files)(
+        segSource, segTracking, composedMeta, composedStats)
+  }
 
   /** Writer-side segment DIRTINESS ledger, carried with the state (like
     * `segSource`, outside equality): which base segments a delta since
@@ -1052,11 +1058,13 @@ object ManifestTable {
     * against a from-DISK structural replay of the published chain, so
     * writer-state drift can never survive past one checkpoint interval
     * undetected. Render equivalence (state → text) is exercised at
-    * every checkpoint and full write via render∘parse identity. */
-  private final case class ComposedManifest(
-      body: String, state: Parsed,
-      statsMap: Option[Map[String, ManifestStats.FileStats]], isFull: Boolean,
-      metaMap: Option[Map[String, String]] = None)
+    * every checkpoint and full write via render∘parse identity.
+    *
+    * A compose returns the stored `body` and the version's `state`,
+    * which carries whatever decoded maps the compose built
+    * ([[Parsed.composedMeta]]/[[Parsed.composedStats]]); [[commit]]
+    * makes that state resident as is. */
+  private final case class ComposedManifest(body: String, state: Parsed)
 
   /** Commit-path instrumentation (spec-read): inline full-body renders
     * and per-file stats-line SERIALIZATIONS. The scale contract is that
@@ -1122,11 +1130,12 @@ object ManifestTable {
         .asInstanceOf[org.apache.spark.sql.types.StructType]))
 
   /** Structural equivalent of [[composeBody]]: the full state of `next`
-    * with ZERO text rendering — the segmented branch's input when no
-    * base state exists to diff against. */
+    * (with its decoded maps) with ZERO text rendering — the segmented
+    * branch's input when no base state exists to diff against, offering
+    * `segSource` (the prior version's segments) for reuse. */
   private def stateFor(next: Long, op: String, meta0: Map[String, String],
-      allFiles: Seq[String], stats: Map[String, ManifestStats.FileStats])
-      : (Parsed, Map[String, ManifestStats.FileStats], Map[String, String]) = {
+      allFiles: Seq[String], stats: Map[String, ManifestStats.FileStats],
+      segSource: Option[Vector[Segment]]): Parsed = {
     val meta = normalizeMeta(meta0, allFiles)
     val metaLines = meta.map { case (k, v) => k -> s"$MetaPrefix$k=$v" }
     val statsLines = scala.collection.mutable.HashMap.empty[String, String]
@@ -1143,25 +1152,25 @@ object ManifestTable {
       statsLines += ManifestStats.RollupKey ->
         (StatsPrefix + ManifestStats.serialize(ManifestStats.RollupKey, r))
     }
-    (Parsed(s"# graft-manifest version=$next op=$op", metaLines,
-      statsLines.toMap, allFiles.toVector)(None), statsMap.toMap, meta)
+    Parsed(s"# graft-manifest version=$next op=$op", metaLines,
+      statsLines.toMap, allFiles.toVector)(segSource, None, Some(meta), Some(statsMap.toMap))
   }
 
   /** Store a FULL-form version from its composed state: inline flat
     * text below the segment threshold (one dependency-free file), the
-    * two-tier pointer form above it. */
+    * two-tier pointer form above it. Either way the returned state keeps
+    * the composed maps. */
   private def composeStoredFull(spark: SparkSession, root: String, next: Long,
-      op: String, state: Parsed, segSource: Option[Vector[Segment]],
-      statsMap: Option[Map[String, ManifestStats.FileStats]],
-      metaMap: Option[Map[String, String]]): ComposedManifest =
+      op: String, state: Parsed): ComposedManifest =
     if (state.files.size < SegmentTargetSize) {
       val body = renderParsed(state)
-      ComposedManifest(body, parseFull(body), statsMap, isFull = true, metaMap)
-    } else composeSegmented(spark, root, next, op, state, segSource, statsMap, metaMap)
+      ComposedManifest(body, parseFull(body).relaid(
+        composedMeta = state.composedMeta, composedStats = state.composedStats))
+    } else composeSegmented(spark, root, next, op, state)
 
   /** The TWO-TIER full form (Iceberg's manifest-list shape in the
-    * repo's text format): carry every untouched base segment by
-    * POINTER, rewrite only segments that lost members or changed stats,
+    * repo's text format): carry every untouched base segment (the
+    * state's `segSource`) by POINTER, rewrite only segments that lost members or changed stats,
     * seal the unsegmented tail (everything appended since the last
     * segmented full) into fresh segments. Checkpoint string work is
     * O(delta + touched segments + #segments + table-level meta), never
@@ -1172,9 +1181,8 @@ object ManifestTable {
     * the segments beside its files; only table-level meta stays inline
     * in the pointer body. */
   private def composeSegmented(spark: SparkSession, root: String, next: Long,
-      op: String, state: Parsed, segSource: Option[Vector[Segment]],
-      statsMap: Option[Map[String, ManifestStats.FileStats]],
-      metaMap: Option[Map[String, String]]): ComposedManifest = {
+      op: String, state: Parsed): ComposedManifest = {
+    val segSource = state.segSource
     // ---- TRACKED branch: the dirtiness ledger says exactly which
     // segments a delta touched, so clean segments carry with ZERO
     // member visits and the walk is O(dirty members + tail + segments).
@@ -1298,9 +1306,7 @@ object ManifestTable {
       SegTracking(mo0, Vector.empty, Set.empty, Set.empty)
     }
     ComposedManifest(withIntegrityTrailer(body.toString),
-      Parsed(state.header, state.metaLines, state.statsLines, state.files)(
-        Some(segs), newTracking),
-      statsMap, isFull = false, metaMap)
+      state.relaid(Some(segs), newTracking))
   }
 
   private def composeTiered(spark: SparkSession, root: String, next: Long,
@@ -1312,11 +1318,11 @@ object ManifestTable {
       val allFiles = baseFiles ++ newFiles
       if (allFiles.size < SegmentTargetSize) {
         val f = composeBody(next, op, meta0, allFiles, stats)
-        ComposedManifest(f, parseFull(f), None, isFull = true)
+        ComposedManifest(f, parseFull(f))
       } else {
-        val (st, sm, mm) = stateFor(next, op, meta0, allFiles, stats)
         val segSrc = Option(stateCache.get(root, next - 1)).flatMap(_.segSource)
-        composeSegmented(spark, root, next, op, st, segSrc, Some(sm), Some(mm))
+        composeSegmented(spark, root, next, op,
+          stateFor(next, op, meta0, allFiles, stats, segSrc))
       }
     }
 
@@ -1359,7 +1365,7 @@ object ManifestTable {
     // is what the checkpoint divergence gate exists to catch.
     if (appendShaped && (baseFiles eq base.files)) {
       val adds = newFiles.toVector
-      val baseMeta = metaMapOf(root, next - 1, base)
+      val baseMeta = base.metaMap
       val newMetaMap = normalizeMetaAppend(meta0, adds, baseMeta)
       val metaPlus = newMetaMap.iterator
         .filter { case (k, v) => !baseMeta.get(k).contains(v) }
@@ -1370,7 +1376,7 @@ object ManifestTable {
         ComposeMeters.statsLinesSerialized.incrementAndGet()
         p -> (StatsPrefix + ManifestStats.serialize(p, fsNew))
       })
-      val baseStats = rawStatsOf(root, next - 1, base)
+      val baseStats = base.statsMap
       val newRollup: Option[ManifestStats.FileStats] =
         if (base.files.isEmpty) rollupOf(newMetaMap, adds, stats)
         else baseStats.get(ManifestStats.RollupKey) match {
@@ -1415,22 +1421,21 @@ object ManifestTable {
         else Nil
       val parts = DeltaParts(next, op, metaPlus, metaMinus,
         statsPlus, statsMinus, adds, Set.empty)
-      val newState = applyDeltaParsed(base, parts)
       val newStatsMap = {
         val withAdds = adds.foldLeft(baseStats - ManifestStats.RollupKey)(
           (m, p) => stats.get(p).fold(m)(fsN => m + (p -> fsN)))
         newRollup.fold(withAdds)(r => withAdds + (ManifestStats.RollupKey -> r))
       }
-      if (isCkpt) return composeStoredFull(spark, root, next, op, newState,
-        base.segSource, Some(newStatsMap), Some(newMetaMap))
+      val newState = applyDeltaParsed(base, parts)
+        .relaid(composedMeta = Some(newMetaMap), composedStats = Some(newStatsMap))
+      if (isCkpt) return composeStoredFull(spark, root, next, op, newState)
       val delta = renderDelta(next, op, metaPlus, metaMinus,
         statsPlus, statsMinus, Nil, adds)
       // gate (1): the reader's decode of this delta must reproduce the
       // intended ACTIONS exactly — encode/decode asymmetries degrade to
       // a full write, never a wrong manifest
       if (parseDelta(delta) != parts) return composeFull()
-      return ComposedManifest(delta, newState, Some(newStatsMap),
-        isFull = false, Some(newMetaMap))
+      return ComposedManifest(delta, newState)
     }
 
     // ---- structural path: everything else (rewrites, metadata ops) ----
@@ -1449,7 +1454,7 @@ object ManifestTable {
     // stats lines of the NEW state: carried entries with unchanged
     // parsed stats reuse the base line; changed/new entries serialize
     // fresh — O(delta) serialization, O(files) cheap struct compares
-    val baseStats = rawStatsOf(root, next - 1, base)
+    val baseStats = base.statsMap
     val statsLines = mutable.LinkedHashMap.empty[String, String]
     val newStatsMap = mutable.HashMap.empty[String, ManifestStats.FileStats]
     allFiles.foreach { p =>
@@ -1484,24 +1489,23 @@ object ManifestTable {
         metaPlus.keysIterator.toSeq, metaMinus.toSeq)
       else None
     val newState = Parsed(s"# graft-manifest version=$next op=$op",
-      metaLines, statsLines.toMap, allFiles.toVector)(base.segSource, newTracking)
-    if (isCkpt || !deltaShaped) return composeStoredFull(spark, root, next, op,
-      newState, base.segSource, Some(newStatsMap.toMap), Some(newMetaMap))
+      metaLines, statsLines.toMap, allFiles.toVector)(
+      base.segSource, newTracking, Some(newMetaMap), Some(newStatsMap.toMap))
+    if (isCkpt || !deltaShaped)
+      return composeStoredFull(spark, root, next, op, newState)
     val deltaLines = adds.size + removes.size + metaPlus.size + metaMinus.size +
       statsPlus.size + statsMinus.size
     if (deltaLines >= allFiles.size + statsLines.size + metaLines.size)
-      return composeStoredFull(spark, root, next, op, newState,
-        base.segSource, Some(newStatsMap.toMap), Some(newMetaMap))
+      return composeStoredFull(spark, root, next, op, newState)
     val delta = renderDelta(next, op,
       metaPlus.toSeq.sortBy(_._1), metaMinus.toSeq.sorted,
       statsPlus.toSeq, statsMinus.toSeq.sorted, removes, adds)
     // gate (1): the reader's decode of this delta, applied with the
     // reader's merge, must reproduce the intended state EXACTLY
     val replay = applyDeltaParsed(base, parseDelta(delta))
-    if (replay != newState) return composeStoredFull(spark, root, next, op,
-      newState, base.segSource, Some(newStatsMap.toMap), Some(newMetaMap))
-    ComposedManifest(delta, newState, Some(newStatsMap.toMap),
-      isFull = false, Some(newMetaMap))
+    if (replay != newState)
+      return composeStoredFull(spark, root, next, op, newState)
+    ComposedManifest(delta, newState)
   }
 
   /** The file list a given version names (root-relative paths). */
@@ -1514,7 +1518,7 @@ object ManifestTable {
     * the data it describes. */
   def manifestMeta(spark: SparkSession, root: String, version: Long): Map[String, String] = {
     ComposeMeters.metaReads.incrementAndGet()
-    metaMapOf(root, version, parsedAt(spark, root, version))
+    parsedAt(spark, root, version).metaMap
   }
 
   /** The op recorded in a version's manifest header (commit or delta). */
@@ -1798,21 +1802,12 @@ object ManifestTable {
   def tableRollup(spark: SparkSession, root: String, version: Long): Option[ManifestStats.FileStats] =
     rawStats(spark, root, version).get(ManifestStats.RollupKey)
 
-  private def rawStats(spark: SparkSession, root: String, version: Long): Map[String, ManifestStats.FileStats] = {
-    val p = parsedAt(spark, root, version)
-    rawStatsOf(root, version, p)
-  }
-
-  /** Decode a version's stats lines to FileStats, LRU-cached — the
-    * commit path primes this for its own versions, so the incremental
-    * compose's changed-line detection never re-decodes O(files). */
-  private def rawStatsOf(root: String, version: Long,
-      p: Parsed): Map[String, ManifestStats.FileStats] =
-    statsMapCache.getOrCompute(root, version) {
-      p.statsLines.valuesIterator
-        .map(l => ManifestStats.deserialize(l.stripPrefix(StatsPrefix)))
-        .toMap
-    }
+  /** A version's decoded stats, the rollup included — held by its
+    * resident state ([[Parsed.statsMap]]), which the commit path builds
+    * with the map already decoded, so its own versions never re-decode
+    * O(files). */
+  private def rawStats(spark: SparkSession, root: String, version: Long): Map[String, ManifestStats.FileStats] =
+    parsedAt(spark, root, version).statsMap
 
   /** Read the table at `version` (default: latest) scanning ONLY the
     * files whose committed stats admit rows matching `filter` — file
@@ -2184,7 +2179,7 @@ object ManifestTable {
     val files = parsed.files
     val schema = schemaOf(spark, root, v).getOrElse(
       return (files, Seq.empty, v)) // pre-schema log: no sound analysis base
-    val raw = rawStats(spark, root, v)
+    val raw = parsed.statsMap
     val stats = raw - ManifestStats.RollupKey
     val transforms = transformsOf(spark, root, v)
     val renames = columnRenames(schema)
@@ -2200,7 +2195,7 @@ object ManifestTable {
     // by their pointer rollup in O(segments) before any per-file stats
     // work — per-file predicate evaluation happens only inside
     // segments (and the unsegmented tail) the rollups couldn't rule out
-    val (kept, dropped) = pruneIndexOf(root, v, parsed) match {
+    val (kept, dropped) = parsed.pruneIndex match {
       case Some(idx) => ManifestStats.pruneGrouped(
         spark, schema, filter, stats, idx.groups,
         transforms = transforms, renames = renames)
@@ -2218,34 +2213,11 @@ object ManifestTable {
     * delta can REPLACE a member's stats; a rollup over superseded
     * stats must not exclude). Files no segment covers (the delta tail
     * appended since the checkpoint) form a rollup-less final group.
-    * Built once per (root, version) — O(files) cheap map lookups —
-    * then every planned query pays only O(segments + surviving
-    * members); LRU-cached beside the parsed state it derives from. */
+    * Built once per resident state ([[Parsed.pruneIndex]]) — O(files)
+    * cheap map lookups — then every planned query pays only
+    * O(segments + surviving members). */
   private final case class PruneIndex(
       groups: Vector[(Option[ManifestStats.FileStats], Vector[String])])
-
-  private val pruneIndexCache = new PerRootLru[PruneIndex](8, 64)
-
-  private def pruneIndexOf(root: String, v: Long, p: Parsed): Option[PruneIndex] =
-    p.segSource.filter(_.nonEmpty).map { segs =>
-      pruneIndexCache.getOrCompute(root, v) {
-        val fileSet = p.files.toSet
-        val covered = new java.util.HashSet[String]()
-        val groups = Vector.newBuilder[(Option[ManifestStats.FileStats], Vector[String])]
-        segs.foreach { s =>
-          val live = s.members.filter(fileSet.contains)
-          live.foreach(covered.add)
-          if (live.nonEmpty) {
-            val rollupValid = s.rollup.isDefined &&
-              live.forall(m => p.statsLines.get(m) == s.stats.get(m))
-            groups += ((if (rollupValid) s.rollup else None, live))
-          }
-        }
-        val tail = p.files.filterNot(covered.contains)
-        if (tail.nonEmpty) groups += ((None, tail))
-        PruneIndex(groups.result())
-      }
-    }
 
   /** O(pointer-bytes + columns) driver-side routing test: can ANY row
     * of this table match `filter`? `false` only when the committed
@@ -2255,8 +2227,9 @@ object ManifestTable {
     * `true` whenever the table lacks a rollup or the rollup admits the
     * predicate — keep-biased like every skipping tier.
     *
-    * COLD cost is the point: a resident structural state answers in
-    * O(1); otherwise the (meta, rollup) pair comes from the version's
+    * COLD cost is the point: a resident structural state answers from
+    * its decoded meta and stats (decoded at most once per resident
+    * version, and never for a version this JVM committed); otherwise the (meta, rollup) pair comes from the version's
     * [[ColdOverlay]] — the inline header of the stored full form plus
     * the delta chain's overlay, or the trusted `.pruneidx` sidecar —
     * WITHOUT loading a single segment file or building the O(files)
@@ -2275,9 +2248,7 @@ object ManifestTable {
     val resident = stateCache.get(root, v)
     val (meta, rollup) =
       if (resident != null)
-        (metaMapOf(root, v, resident),
-          resident.statsLines.get(ManifestStats.RollupKey)
-            .map(l => ManifestStats.deserialize(l.stripPrefix(StatsPrefix))._2))
+        (resident.metaMap, resident.statsMap.get(ManifestStats.RollupKey))
       else {
         val ov = coldOverlayAt(spark, root, v)
         (ov.meta, ov.tableRu)
@@ -2890,7 +2861,7 @@ object ManifestTable {
     val added = cur.filterNot(old)
     val df =
       if (added.isEmpty)
-        read(spark, root, Some(tip)).limit(0) // empty, but schema-correct
+        readAt(spark, root, tip).limit(0) // empty, but schema-correct
       else
         // the TIP schema, so a delta spanning a widening append reads
         // the new columns (NULL-backfilled in pre-widening files) and a
@@ -2956,7 +2927,7 @@ object ManifestTable {
       sinceVersion: Long,
       untilVersion: Option[Long] = None,
       listed: Option[Seq[Long]] = None): (DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{broadcast, lit, sum}
+    import org.apache.spark.sql.functions.{broadcast, lit}
     val vs = listed.getOrElse(versions(spark, root))
     refuse(vs.contains(sinceVersion),
       s"version $sinceVersion not in log (have ${vs.mkString(",")}) — cursor invalid, full refresh required")
@@ -2987,60 +2958,55 @@ object ManifestTable {
     val inserts =
       if (added.isEmpty) emptyTagged
       else readFiles(spark, root, schema, added, dvNewP).withColumn(ct, lit("insert"))
-    // vectors are immutable uuid-named files, so an unchanged DvKey path
-    // means an unchanged vector: the whole delete/resurrect diff is a
-    // metadata no-op — zero Spark jobs for the (common) append-only
-    // window. When it DID change, ONE ±1 union-aggregate pass computes
-    // both diff directions (the rows of a vector are unique — every
-    // writer distincts before the write), and ONE file-level summary
-    // collect answers both directions' touched-file sets (the previous
-    // shape paid one collect per direction). The POSITIONS stay
-    // distributed: a 10× A/B showed that driver-collecting them into
-    // local relations embeds change-rate-sized row sets into every plan
-    // that consumes the feed (task-binary bloat) — the summary is
-    // bounded by the table's FILE count instead.
-    val (deletes, resurrectedRows) =
-      if (dvNewP == dvOldP) (emptyTagged, emptyTagged)
-      else {
-        val dvOld = dvOldP.map(p => dvFrame(spark, root, p)).getOrElse(emptyDvFrame(spark))
-        val dvNew = dvNewP.map(p => dvFrame(spark, root, p)).getOrElse(emptyDvFrame(spark))
-        val dvDiff = dvDiffFrame(spark, dvNew, dvOld)
-        val sides = dvDiffSides(dvDiff)
-        def touching(del: Boolean): Seq[String] = {
-          val keys = sides.collect { case (f, d) if d == del => f }.toSet
+    val (deletes, resurrectedRows) = dvDiff(spark, root, dvNewP, dvOldP) match {
+      case None => (emptyTagged, emptyTagged)
+      case Some(d) =>
+        def touching(keys: Set[String]): Seq[String] =
           cur.filter(f => old.contains(f) && keys.contains(dvFileKey(f)))
-        }
-        val newlyDeleted = dvDiff.filter(col("_side") > 0L).select("file", "pos")
-        val resurrected = dvDiff.filter(col("_side") < 0L).select("file", "pos")
-        (rowsAt(touching(del = true), newlyDeleted, "delete"),
-          rowsAt(touching(del = false), resurrected, "insert"))
-      }
+        (rowsAt(touching(d.grownKeys), d.grown, "delete"),
+          rowsAt(touching(d.shrunkKeys), d.shrunk, "insert"))
+    }
     (inserts.unionByName(deletes).unionByName(resurrectedRows), tip)
   }
 
-  /** The ±1 deletion-vector diff, CHECKPOINTED (one job): rows of
-    * `dvNew` minus `dvOld` carry _side > 0, the reverse < 0. Positions
-    * stay distributed — consumers broadcast them at the positional
-    * semi-join, never through the driver. */
-  private def dvDiffFrame(spark: SparkSession, dvNew: DataFrame,
-      dvOld: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{lit, sum}
-    dvNew.withColumn("_side", lit(1L))
-      .unionByName(dvOld.withColumn("_side", lit(-1L)))
-      .groupBy(col("file"), col("pos")).agg(sum(col("_side")).as("_side"))
-      .filter(col("_side") =!= 0L)
-      .localCheckpoint()
-  }
+  /** Both directions of a deletion-vector change: the (file, pos)
+    * positions the vector `grew` by and `shrunk` by, each with the file
+    * keys those positions reference. */
+  private final case class DvDiff(grown: DataFrame, grownKeys: Set[String],
+      shrunk: DataFrame, shrunkKeys: Set[String])
 
-  /** ONE collect over the checkpointed diff: the distinct
-    * (file, grew?) pairs — bounded by the table's file count, like the
-    * manifest itself. Answers, with no further jobs: which files each
-    * diff direction touches, whether the vector shrank anywhere, and
-    * whether it grew at all. */
-  private def dvDiffSides(dvDiff: DataFrame): Seq[(String, Boolean)] =
-    dvDiff.select(col("file"), (col("_side") > 0L).as("__del"))
-      .distinct().collect()
-      .map(r => (r.getString(0), r.getBoolean(1))).toSeq
+  /** The change-feed diff of two deletion-vector paths. Vectors are
+    * immutable uuid-named files, so equal paths mean an unchanged
+    * vector: None, with zero Spark jobs (the common append-only
+    * window). Otherwise ONE checkpointed ±1 union-aggregate job computes
+    * both directions (the rows of a vector are unique — every writer
+    * distincts before the write), and ONE collect of the distinct
+    * (file, grew?) pairs answers both directions' key sets — bounded by
+    * the table's FILE count, like the manifest itself. The POSITIONS
+    * stay distributed: a 10× A/B showed that driver-collecting them into
+    * local relations embeds change-rate-sized row sets into every plan
+    * that consumes the feed (task-binary bloat); consumers broadcast
+    * them at the positional semi-join instead. */
+  private def dvDiff(spark: SparkSession, root: String,
+      newPath: Option[String], oldPath: Option[String]): Option[DvDiff] =
+    if (newPath == oldPath) None
+    else {
+      import org.apache.spark.sql.functions.{lit, sum}
+      def side(p: Option[String], sign: Long): DataFrame =
+        p.map(dvFrame(spark, root, _)).getOrElse(emptyDvFrame(spark))
+          .withColumn("_side", lit(sign))
+      val diff = side(newPath, 1L).unionByName(side(oldPath, -1L))
+        .groupBy(col("file"), col("pos")).agg(sum(col("_side")).as("_side"))
+        .filter(col("_side") =!= 0L)
+        .localCheckpoint()
+      val sides = diff.select(col("file"), (col("_side") > 0L).as("__grew"))
+        .distinct().collect()
+        .map(r => (r.getString(0), r.getBoolean(1)))
+      def keys(grew: Boolean): Set[String] =
+        sides.collect { case (f, g) if g == grew => f }.toSet
+      Some(DvDiff(diff.filter(col("_side") > 0L).select("file", "pos"), keys(grew = true),
+        diff.filter(col("_side") < 0L).select("file", "pos"), keys(grew = false)))
+    }
 
   /** Change-data feed over a ROW-TRACKED table — the version walk that
     * serves an EMPTY delta across id-preserving rewrites, where the
@@ -3093,12 +3059,12 @@ object ManifestTable {
     val ct = "_change_type"
     val rewriteOps = Set("compact", "compact-small", "zorder", "cluster", "purge-dv")
     def opOf(v: Long): String = opAt(spark, root, v)
-    def dvOf(v: Long): DataFrame = deletionVector(spark, root, v)
-      .map(p => dvFrame(spark, root, p)).getOrElse(emptyDvFrame(spark))
+    def dvDiffAt(v: Long): Option[DvDiff] = dvDiff(spark, root,
+      deletionVector(spark, root, v), deletionVector(spark, root, v - 1))
     // rows at dv positions `pos` within version v's manifest, with ids;
     // `keys` are the file keys the positions reference, precomputed by
-    // the caller's single side-summary collect (dvDiffSides) — this
-    // must not run its own per-direction collect job
+    // the single side-summary collect of [[dvDiff]] — this must not run
+    // its own per-direction collect job
     def rowsAt(v: Long, pos: DataFrame, keys: Set[String]): DataFrame = {
       val refd = manifestFiles(spark, root, v).filter(f => keys.contains(dvFileKey(f)))
       val pf = readFilesWithRowIds(spark, root, v, refd)
@@ -3144,20 +3110,11 @@ object ManifestTable {
       } else if (op.startsWith("restore-")) {
         refuse(added.isEmpty,
           s"v$v ($op) changed the file set — delta not id-expressible, full refresh required")
-        // unchanged DvKey path = unchanged (immutable) vector: zero jobs;
-        // otherwise one ±1 diff job + ONE side-summary collect serves
-        // both directions (see readChangesWithDeletes — positions stay
-        // distributed, only the file-level summary reaches the driver)
-        if (deletionVector(spark, root, v) != deletionVector(spark, root, v - 1)) {
-          val dvDiff = dvDiffFrame(spark, dvOf(v), dvOf(v - 1))
-          val sides = dvDiffSides(dvDiff)
-          def keysOf(del: Boolean): Set[String] =
-            sides.collect { case (f, d) if d == del => f }.toSet
-          events :+= rowsAt(v, dvDiff.filter(col("_side") > 0L).select("file", "pos"),
-              keysOf(del = true))
+        // a grown vector deletes, a shrunk one resurrects
+        dvDiffAt(v).foreach { d =>
+          events :+= rowsAt(v, d.grown, d.grownKeys)
             .withColumn("__v", lit(v)).withColumn("__kind", lit("del"))
-          events :+= rowsAt(v, dvDiff.filter(col("_side") < 0L).select("file", "pos"),
-              keysOf(del = false))
+          events :+= rowsAt(v, d.shrunk, d.shrunkKeys)
             .withColumn("__v", lit(v)).withColumn("__kind", lit("ins"))
         }
       } else {
@@ -3165,18 +3122,13 @@ object ManifestTable {
           events :+= readFilesWithRowIds(spark, root, v, added)
             .drop(DvFileCol, DvPosCol)
             .withColumn("__v", lit(v)).withColumn("__kind", lit("ins"))
-        // same path guard + one-pass diff + side summary as the restore
-        // branch above; the shrink refusal and the grown-empty check
-        // read the summary — no further jobs
-        if (deletionVector(spark, root, v) != deletionVector(spark, root, v - 1)) {
-          val dvDiff = dvDiffFrame(spark, dvOf(v), dvOf(v - 1))
-          val sides = dvDiffSides(dvDiff)
-          refuse(!sides.exists(!_._2),
+        // the shrink refusal and the grown-empty check read the diff's
+        // key sets — no further jobs
+        dvDiffAt(v).foreach { d =>
+          refuse(d.shrunkKeys.isEmpty,
             s"v$v ($op) shrank the deletion vector outside RESTORE — full refresh required")
-          val grownKeys = sides.collect { case (f, d) if d => f }.toSet
-          if (grownKeys.nonEmpty)
-            events :+= rowsAt(v, dvDiff.filter(col("_side") > 0L).select("file", "pos"),
-                grownKeys)
+          if (d.grownKeys.nonEmpty)
+            events :+= rowsAt(v, d.grown, d.grownKeys)
               .withColumn("__v", lit(v)).withColumn("__kind", lit("del"))
         }
       }
@@ -3258,15 +3210,10 @@ object ManifestTable {
         // the atomic publish: rename refuses an existing destination, so
         // exactly one of two racing committers wins version `next`
         if (publishRaw(spark, root, next, cm.body)) {
-          // prime the STRUCTURAL caches: same-JVM readers of this version
-          // never re-parse or chain-walk; full text (only needed by the
-          // rare text consumers) is rendered on demand
+          // make the composed state resident: same-JVM readers of this
+          // version never re-parse, chain-walk or re-decode the maps the
+          // compose built
           stateCache.put(root, next, cm.state)
-          cm.statsMap.foreach(m =>
-            statsMapCache.put(root, next, m))
-          cm.metaMap.foreach(m =>
-            metaMapCache.put(root, next, m))
-          if (cm.isFull) resolvedCached(root, next)(cm.body)
           return next
         }
       } catch {
@@ -3398,7 +3345,6 @@ object ManifestTable {
       stats: Map[String, ManifestStats.FileStats]): String =
     if (allFiles.size < SegmentTargetSize) composeBody(next, op, meta0, allFiles, stats)
     else {
-      val (st, sm, mm) = stateFor(next, op, meta0, allFiles, stats)
       // reuse the prior version's segments when it exists; ONLY the
       // no-prior-version case (version 1, or a vacuumed-away base —
       // surfacing as a missing-file read) may degrade to resealing from
@@ -3413,7 +3359,8 @@ object ManifestTable {
             case e: IllegalArgumentException
                 if e.getMessage != null && e.getMessage.contains("not a manifest") => None
           }).flatMap(_.segSource)
-      composeSegmented(spark, root, next, op, st, segSrc, Some(sm), Some(mm)).body
+      composeSegmented(spark, root, next, op,
+        stateFor(next, op, meta0, allFiles, stats, segSrc)).body
     }
 
   private[sources] def composeBody(next: Long, op: String,
@@ -4940,9 +4887,8 @@ object ManifestTable {
         // lines, not a gigabyte string)
         val st = parsedAt(spark, root, oldest)
         val resolved =
-          if (st.files.size < SegmentTargetSize) manifestText(spark, root, oldest)
-          else composeSegmented(spark, root, oldest, opAt(spark, root, oldest),
-            st, st.segSource, None, None).body
+          if (st.files.size < SegmentTargetSize) renderParsed(st)
+          else composeSegmented(spark, root, oldest, opAt(spark, root, oldest), st).body
         val tmp = new Path(s"$root/$LogDir/.tmp-${UUID.randomUUID()}")
         val out = f.create(tmp, false)
         try out.write(resolved.getBytes(StandardCharsets.UTF_8))

@@ -350,4 +350,20 @@ class ChangeFeedSpec extends SparkSpec {
       assert(feed.filter(col(ct) === "delete").count() > 0)
     }
   }
+
+  test("readChangesSince: one call lists the log once, on an empty or a non-empty window") {
+    val root = freshRoot("rcs_listing")
+    ManifestTable.create(spark, root, orders.filter(col("o_orderstatus") === "F"))
+    val cursor = ManifestTable.versions(spark, root).max
+    def listingsOfOneCall(since: Long): (Long, Long, Long) = {
+      val before = ManifestTable.listingsOf(root)
+      val (feed, consumed) = ManifestTable.readChangesSince(spark, root, since)
+      (ManifestTable.listingsOf(root) - before, consumed, feed.count())
+    }
+    assert(listingsOfOneCall(cursor) === ((1L, cursor, 0L)), "empty window")
+    val appended = orders.filter(col("o_orderstatus") === "O")
+    ManifestTable.append(spark, root, appended)
+    assert(listingsOfOneCall(cursor) === ((1L, cursor + 1, appended.count())),
+      "non-empty window")
+  }
 }

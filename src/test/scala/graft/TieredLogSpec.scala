@@ -806,4 +806,65 @@ class TieredLogSpec extends SparkSpec {
       assert(kept2 === kept && dropped2.toSet === dropped.toSet)
     } finally ManifestTable.SegmentTargetSize = saved
   }
+
+  test("warm state equals cold state at every version: flat and pointer full forms, fast path, structural ops, compact, vacuum") {
+    val root = freshRoot()
+    val saved = ManifestTable.SegmentTargetSize
+    ManifestTable.SegmentTargetSize = 8
+    try {
+      val (keys, slice) = twelfths(orders)
+      val filter = col("o_orderkey") < keys(keys.length / 3)
+      // pruneCounts first: on a cold pass it must see the version
+      // un-resident and answer from the overlay
+      def answers(v: Long) = {
+        val counts = ManifestTable.pruneCounts(spark, root, filter, Some(v))
+        val (kept, dropped, _) = ManifestTable.pruneFiles(spark, root, filter, Some(v))
+        (counts, kept, dropped.toSet,
+          ManifestTable.manifestMeta(spark, root, v),
+          ManifestTable.fileStats(spark, root, v),
+          ManifestTable.tableRollup(spark, root, v))
+      }
+      val warm = scala.collection.mutable.Map.empty[Long, Any]
+      // after each commit: every live version's answers, which must not
+      // change while the state stays (or becomes again) resident
+      def recordWarm(): Unit = ManifestTable.versions(spark, root).foreach { v =>
+        val a = answers(v)
+        warm.get(v).foreach(w => assert(a === w, s"v$v answers changed while warm"))
+        warm(v) = a
+      }
+      def assertColdEqualsWarm(): Unit = {
+        ManifestTable.dropResolvedCacheForTest()
+        ManifestTable.versions(spark, root).foreach(v =>
+          assert(answers(v) === warm(v), s"cold answers at v$v differ from warm"))
+      }
+      def append(i: Int): Unit = {
+        ManifestTable.append(spark, root, slice(i), statsColumns = Seq("o_orderkey"))
+        recordWarm()
+      }
+      ManifestTable.create(spark, root, slice(0), statsColumns = Seq("o_orderkey"))
+      recordWarm()
+      (1 to 3).foreach(append) // v2..v4: append fast path on a flat base
+      ManifestTable.deleteMor(spark, root, col("o_orderkey") === keys(1))
+      recordWarm()
+      ManifestTable.analyze(spark, root, Seq("o_orderkey", "o_custkey"))
+      recordWarm()
+      (4 to 7).foreach(append) // v10 checkpoints 8 files: the pointer form
+      assert(rawHead(root, 10L).contains(" segs=1"), "v10 must store in pointer form")
+      append(8) // v11: a delta over the segmented base
+      ManifestTable.compact(spark, root, targetFileBytes = 1L << 30,
+        statsColumns = Seq("o_orderkey"))
+      recordWarm()
+      (9 to 10).foreach(append)
+      val vs = ManifestTable.versions(spark, root)
+      val oldestKept = vs(vs.size - 2)
+      assert(isStoredDelta(root, oldestKept), s"v$oldestKept must be a delta to materialize")
+      assertColdEqualsWarm()
+      ManifestTable.vacuum(spark, root, keepVersions = 2)
+      assert(Files.exists(Paths.get(root, "_graft_log", f"v$oldestKept%08d.checkpoint")),
+        "vacuum must materialize the oldest retained delta")
+      recordWarm()
+      append(11)
+      assertColdEqualsWarm()
+    } finally ManifestTable.SegmentTargetSize = saved
+  }
 }
