@@ -36,23 +36,18 @@ object JaffleMain {
     spark.sparkContext.setLogLevel("WARN")
     try {
       // seed (dbt seed): CSV -> typed parquet
-      val seeds = SeedLoader.materialize(
-        spark, SeedLoader.loadJaffleSeeds(spark, seedDir), s"$outDir/seeds")
+      val raw = SeedLoader.loadJaffleSeeds(spark, seedDir)
+      val seeds = SeedLoader.materialize(spark, raw, s"$outDir/seeds")
       seeds.toSeq.sortBy(_._1).foreach { case (n, df) => println(f"[seed] $n%-14s ${df.count()}%5d rows") }
       // run (dbt run): topo-ordered DAG, views lazy, marts -> parquet
       val rel =
         if (!stateAware)
           Jaffle.registry.run(spark, seeds, tableDir = Some(s"$outDir/marts"))
         else {
-          // seed-content tokens: the marts' input state is the seed BYTES,
-          // so an unchanged seed re-run skips the rebuild and a touched
-          // seed invalidates exactly its downstream
-          val tokens = Seq("raw_customers", "raw_orders", "raw_payments").map { n =>
-            val bytes = java.nio.file.Files.readAllBytes(
-              java.nio.file.Paths.get(s"$seedDir/$n.csv"))
-            n -> java.security.MessageDigest.getInstance("MD5").digest(bytes)
-              .map("%02x".format(_)).mkString
-          }.toMap
+          // seed-content tokens: the marts' input state is the seeds'
+          // content digest, so an unchanged seed re-run skips the rebuild
+          // and a touched seed invalidates exactly its downstream
+          val tokens = raw.map { case (n, df) => n -> SeedLoader.digest(df).get }
           def pass(i: Int) = {
             val (r, actions) = Jaffle.registry.runStateAware(
               spark, seeds, s"$outDir/marts", tokens)

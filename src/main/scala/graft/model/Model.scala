@@ -212,8 +212,10 @@ final class Registry(
           tableDir match {
             case Some(dir) =>
               val path = s"$dir/${m.name}"
-              m.build(resolved.toMap).write.mode("overwrite").parquet(path)
-              spark.read.parquet(path)
+              val built = m.build(resolved.toMap)
+              built.write.mode("overwrite").parquet(path)
+              // the written schema is what footer inference would return
+              spark.read.schema(built.schema).parquet(path)
             case None => m.build(resolved.toMap)
           }
         case Materialization.Incremental(strategy) =>

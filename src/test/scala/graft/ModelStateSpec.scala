@@ -218,4 +218,31 @@ class ModelStateSpec extends SparkSpec {
     assert(act3("t_rows") === "built", "a layout change must invalidate the state")
     assert(rel1("t_rows").count() === 100L)
   }
+
+  test("run() re-reads each table it writes under the written schema: no job beyond the write") {
+    def jobs[T](body: => T): (T, Int) = {
+      val n = new AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.SpecListeners.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(l)
+      try {
+        val r = body
+        org.apache.spark.SpecListeners.drain(spark.sparkContext)
+        (r, n.get)
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val model = Model("t_agg", Seq("raw"), Materialization.Table,
+      r => r("raw").groupBy("grp").agg(count(lit(1)).as("n")))
+    val (_, writeJobs) = jobs(model.build(Map("raw" -> src)).write.parquet(freshDir() + "/w"))
+    val dir = freshDir()
+    val (rel, runJobs) = jobs(new Registry(Seq(model)).run(spark, Map("raw" -> src), Some(dir)))
+    assert(runJobs === writeJobs, "run() started a job beyond the table write")
+    val inferred = spark.read.parquet(s"$dir/t_agg")
+    assert(rel("t_agg").schema === inferred.schema)
+    assert(rel("t_agg").collect().toSet === inferred.collect().toSet)
+    assert(rel("t_agg").collect().map(_.getLong(1)).sum === 100L)
+  }
 }
