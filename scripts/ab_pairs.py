@@ -30,14 +30,15 @@ import sys
 import time
 
 
-def run_once(spec, checkout, workload, seed, retries=2):
+def run_once(spec, checkout, workload, seed, retries=2, trace="0"):
+    """One run of `checkout`'s benchmark; returns (metrics, steal, stdout lines)."""
     cmd = spec["command"] + ["--workload", workload, "--seed", str(seed),
-                             "--seconds", str(spec["run_seconds"]), "--trace", "0"]
+                             "--seconds", str(spec["run_seconds"]), "--trace", trace]
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = p.stdout.strip().splitlines()
     if p.returncode != 0 and "stole" in p.stderr and retries > 0:
         print(f"    {checkout}: {p.stderr.strip().splitlines()[-1]} (re-running)", flush=True)
-        return run_once(spec, checkout, workload, seed, retries - 1)
+        return run_once(spec, checkout, workload, seed, retries - 1, trace)
     if p.returncode != 0 or not lines:
         sys.stderr.write(p.stderr[-3000:])
         raise SystemExit(f"{checkout} {workload} seed {seed} failed (exit {p.returncode})")
@@ -47,7 +48,7 @@ def run_once(spec, checkout, workload, seed, retries=2):
     if not result["correct"] or result["failed"]:
         raise SystemExit(f"{checkout} {workload} seed {seed}: correct={result['correct']} "
                          f"failed={result['failed']}")
-    return {m: v["value"] for m, v in result["metrics"].items()}, steal
+    return {m: v["value"] for m, v in result["metrics"].items()}, steal, lines
 
 
 def quartiles(values):
@@ -81,7 +82,7 @@ def main():
         for side in order:
             t0 = time.time()
             pair[side] = run_once(spec, base if side == "base" else change, args.workload, seed)
-            metrics, steal = pair[side]
+            metrics, steal, _ = pair[side]
             print(f"  pair {i + 1:2d} seed {seed}: {side:6s} {time.time() - t0:4.0f} s, "
                   f"steal {steal:.3f}, "
                   + " ".join(f"{m['name']} {metrics[m['name']]:.4g}" for m in spec["end_to_end"]),

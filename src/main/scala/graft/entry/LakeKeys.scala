@@ -55,9 +55,9 @@ private[graft] object LakeKeys {
       val orders = t(s, dir, "orders")
       val MT = graft.sources.ManifestTable
       MT.create(s, fact, orders.filter(col("o_orderstatus") === "F"))
-      graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, Seq("o_orderstatus"), "o_totalprice")
       MT.append(s, fact, orders.filter(col("o_orderstatus") =!= "F"))
-      graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, Seq("o_orderstatus"), "o_totalprice")
       graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         val q = MT.read(s, fact).groupBy("o_orderstatus")
@@ -96,7 +96,7 @@ private[graft] object LakeKeys {
       val MT = graft.sources.ManifestTable
       MT.create(s, fact, orders.filter(col("o_orderstatus") === "F"))
       MT.append(s, fact, orders.filter(col("o_orderstatus") =!= "F"))
-      graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, Seq("o_orderstatus"), "o_totalprice")
       graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         def leafStrings(df: org.apache.spark.sql.DataFrame) =
@@ -267,7 +267,7 @@ private[graft] object LakeKeys {
       val orders = t(s, dir, "orders")
       val MT = graft.sources.ManifestTable
       MT.create(s, fact, orders)
-      graft.ops.LakeOps.maintainAggMart(s, fact, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(s, fact, mart, Seq("o_orderstatus"), "o_totalprice")
       graft.plans.MartRewrite.register(s, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       try {
         def leafStrings(df: org.apache.spark.sql.DataFrame) =
@@ -407,8 +407,8 @@ private[graft] object LakeKeys {
     "lake11_incr_agg" -> ((s, dir) => {
       // incremental view maintenance over the CDF: the agg mart
       // bootstraps on the F slice, then two appends are folded in by
-      // aggregating ONLY each delta and COW-merging the affected
-      // groups; a fourth call is a caught-up no-op. The per-step delta
+      // aggregating ONLY each delta and re-applying the affected groups
+      // in one atomic mart commit; a fourth call is a caught-up no-op. The per-step delta
       // row counts are literal mirrors (the oracle re-derives them), so
       // a maintenance pass that silently rescanned or double-counted
       // breaks the hash; the final mart must equal the from-scratch
@@ -418,18 +418,18 @@ private[graft] object LakeKeys {
       val orders = t(s, dir, "orders")
       graft.sources.ManifestTable.create(s, srcRoot.toString,
         orders.filter(col("o_orderstatus") === "F"))
-      LakeOps.maintainAggMart(s, srcRoot.toString, martRoot.toString,
-        "o_orderstatus", "o_totalprice")
+      LakeOps.maintainAggMartTotal(s, srcRoot.toString, martRoot.toString,
+        Seq("o_orderstatus"), "o_totalprice")
       graft.sources.ManifestTable.append(s, srcRoot.toString,
         orders.filter(col("o_orderstatus") === "O"))
-      val (_, d1) = LakeOps.maintainAggMart(s, srcRoot.toString, martRoot.toString,
-        "o_orderstatus", "o_totalprice")
+      val (_, d1) = LakeOps.maintainAggMartTotal(s, srcRoot.toString, martRoot.toString,
+        Seq("o_orderstatus"), "o_totalprice")
       graft.sources.ManifestTable.append(s, srcRoot.toString,
         orders.filter(col("o_orderstatus") === "P"))
-      val (_, d2) = LakeOps.maintainAggMart(s, srcRoot.toString, martRoot.toString,
-        "o_orderstatus", "o_totalprice")
-      val (_, d3) = LakeOps.maintainAggMart(s, srcRoot.toString, martRoot.toString,
-        "o_orderstatus", "o_totalprice")
+      val (_, d2) = LakeOps.maintainAggMartTotal(s, srcRoot.toString, martRoot.toString,
+        Seq("o_orderstatus"), "o_totalprice")
+      val (_, d3) = LakeOps.maintainAggMartTotal(s, srcRoot.toString, martRoot.toString,
+        Seq("o_orderstatus"), "o_totalprice")
       graft.sources.ManifestTable.read(s, martRoot.toString)
         .select(lit(d1).as("step1_rows"), lit(d2).as("step2_rows"),
           lit(d3).as("step3_rows"), col("o_orderstatus"),

@@ -66,7 +66,6 @@ final case class TableLayout(
       * size); Some(n) pins the count, which AQE respects as a
       * user-specified repartition. */
     files: Option[Int] = None) {
-  def isDefault: Boolean = clusterBy.isEmpty && statsColumns.isEmpty && bloomColumns.isEmpty
   /** Columns that get min/max stats in the manifest. */
   def allStats: Seq[String] = (clusterBy ++ statsColumns).distinct
 }

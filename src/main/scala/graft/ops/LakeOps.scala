@@ -268,7 +268,6 @@ object LakeOps {
 
   // ---- incremental aggregate maintenance (IVM over the manifest CDF) ------
 
-  private val AggCursorKey = "agg-cursor"
   private val TotalType = org.apache.spark.sql.types.DecimalType(28, 4)
 
   /** The newest version of the manifest table at `root`. */
@@ -301,76 +300,15 @@ object LakeOps {
       ExactSums.dsumPartial(col(valueCol)).cast(TotalType).as("total"))
 
   /** Incremental VIEW MAINTENANCE of a count/sum aggregate mart over a
-    * manifest table's change-data-feed — the composition the lakehouse
-    * pieces were built for: instead of re-aggregating the whole source
-    * on every refresh, read ONLY the rows appended since the last
-    * maintained version ([[graft.sources.ManifestTable.readChangesSince]]),
-    * aggregate the delta, and upsert the affected groups through the
-    * copy-on-write [[graft.sources.ManifestTable.merge]]. The consumed
-    * source version rides the SAME atomic merge commit as the updated
-    * rows (`agg-cursor` manifest metadata), so a crash between steps can
-    * never double-count a delta — re-running resumes from the committed
-    * cursor. Count and sum are self-maintainable aggregates (no
-    * per-group rescans); the sum accumulates in DECIMAL partials
-    * ([[ExactSums.dsumPartial]] — exact and ASSOCIATIVE), so the
-    * maintained mart equals a from-scratch [[ExactSums.dsum]] aggregate
-    * bit for bit, however the rows were batched.
-    *
-    * First call bootstraps the mart from a full scan; a call with no new
-    * source version is a no-op (no mart commit). A non-append source
-    * change surfaces readChangesSince's full-refresh error — drop the
-    * mart and bootstrap again.
-    *
-    * Returns (consumed source version, delta rows aggregated). At
-    * 100 TB: refresh cost is O(delta + affected groups' files), not
-    * O(source) — the difference between an hourly mart refresh that
-    * reads an hour and one that reads the lake.
-    */
-  def maintainAggMart(
-      spark: org.apache.spark.sql.SparkSession,
-      srcRoot: String,
-      martRoot: String,
-      keyCol: String,
-      valueCol: String): (Long, Long) = {
-    import graft.sources.ManifestTable
-    val srcTip = tipOf(spark, srcRoot)
-    val martVs = ManifestTable.versions(spark, martRoot)
-    if (martVs.isEmpty) {
-      val src = ManifestTable.read(spark, srcRoot, Some(srcTip))
-      val v = ManifestTable.create(spark, martRoot, countSumAgg(src, Seq(keyCol), valueCol),
-        meta = Map(AggCursorKey -> srcTip.toString))
-      (srcTip, martRows(spark, martRoot, v))
-    } else {
-      val cursor = ManifestTable.manifestMeta(spark, martRoot, martVs.max)
-        .getOrElse(AggCursorKey, throw new IllegalStateException(
-          s"$martRoot has no $AggCursorKey metadata — not a maintained agg mart")).toLong
-      if (cursor == srcTip) (srcTip, 0L) // caught up: no mart commit
-      else {
-        val (delta, tip) = ManifestTable.readChangesSince(spark, srcRoot, cursor)
-        val deltaRows = delta.count()
-        val d = countSumAgg(delta, Seq(keyCol), valueCol).alias("d")
-        val cur = ManifestTable.read(spark, martRoot).alias("m")
-        val upserts = d.join(cur, Seq(keyCol), "left")
-          .select(col(keyCol),
-            (coalesce(col("m.n_rows"), lit(0L)) + col("d.n_rows")).as("n_rows"),
-            (coalesce(col("m.total"), lit(0).cast(TotalType)) + col("d.total"))
-              .cast(TotalType).as("total"))
-        ManifestTable.merge(spark, martRoot, upserts, keyCol,
-          meta = Map(AggCursorKey -> tip.toString))
-        (tip, deltaRows)
-      }
-    }
-  }
-
-  /** [[maintainAggMart]] generalized to the TOTAL change feed: the mart
-    * stays incrementally maintainable through MOR DELETES, MERGE
-    * upserts, and every id-preserving rewrite — exactly the histories
-    * where `readChangesSince` (and so lake11's maintainer) must
-    * full-refresh. The delta aggregates SIGNED: an insert contributes
-    * (+1, +value), a retraction (−1, −value) — count and sum are
-    * self-maintainable under deletion, and DECIMAL partials stay exact
-    * under subtraction, so the maintained mart equals the from-scratch
-    * aggregate bit for bit. Groups whose count reaches zero are REMOVED
+    * manifest table's change feed: instead of re-aggregating the whole
+    * source on every refresh, aggregate ONLY the window's changes and
+    * fold them into the affected groups. The mart stays incrementally
+    * maintainable through appends, MOR DELETES, MERGE upserts, and
+    * every id-preserving rewrite. The delta aggregates SIGNED: an
+    * insert contributes (+1, +value), a retraction (−1, −value) —
+    * count and sum are self-maintainable under deletion, and DECIMAL
+    * partials stay exact under subtraction, so the maintained mart
+    * equals the from-scratch aggregate bit for bit. Groups whose count reaches zero are REMOVED
     * (a rebuild has no row for them), and the whole application — group
     * retractions, group upserts, and the consumed-version watermark —
     * is ONE atomic [[graft.sources.ManifestTable.applyChangesMor]]
@@ -380,7 +318,12 @@ object LakeOps {
     * sources with rewrites in the window need row tracking
     * ([[graft.sources.ManifestTable.enableRowTracking]]); pure
     * append + MOR-delete windows maintain untracked via the positional
-    * feed. Refresh cost: O(window change volume + affected groups).
+    * feed. Refresh cost: O(window change volume + affected groups). A
+    * call with no new source version is a no-op (no mart commit); a
+    * window the feed cannot express (an overwrite, a rewrite of an
+    * untracked source) raises
+    * [[graft.sources.NotDeltaExpressible]] — drop the mart and
+    * bootstrap again.
     *
     * One grouping key gives the (key, n_rows, total) mart, bound on the
     * key itself; a COMPOSITE key gives (k1, …, kn, n_rows, total, mkey),
@@ -913,25 +856,6 @@ object LakeOps {
     graft.plans.MartRewrite.register(
       spark, joinMartRoot, Seq(groupKeyCol), valueCol, aggMartRoot, maxVersionLag)
     (aV, bV, mV, aggRows)
-  }
-
-  /** [[maintainJoinAndReregister]] over the TOTAL feed: advance the
-    * MOR-surviving join mart AND its
-    * [[graft.plans.MartRewrite.registerJoin]] registration in one call. */
-  def maintainJoinTotalAndReregister(
-      spark: org.apache.spark.sql.SparkSession,
-      aRoot: String,
-      bRoot: String,
-      martRoot: String,
-      aKeyCol: String,
-      bKeyCol: String,
-      maxVersionLag: Long = Long.MaxValue,
-      writerId: String = "joinmart-total"): (Long, Long, Long) = {
-    val r = maintainJoinMartTotal(spark, aRoot, bRoot, martRoot,
-      aKeyCol, bKeyCol, writerId)
-    graft.plans.MartRewrite.registerJoin(
-      spark, aRoot, bRoot, aKeyCol, bKeyCol, martRoot, maxVersionLag)
-    r
   }
 
   /** Incremental cross-batch NEAR-DUP discovery — "dedup the daily crawl

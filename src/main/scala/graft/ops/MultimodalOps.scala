@@ -164,13 +164,6 @@ object MultimodalOps {
     }
   }
 
-  /** Back-compat alias for [[decodeImage]] from when every format hit the
-    * stub arm. */
-  @deprecated("png/jpeg now decode real dimensions; use decodeImage", "r3")
-  def decodeImageStub(df: DataFrame, idCol: String, binCol: String)(
-      implicit enc: org.apache.spark.sql.Encoder[MediaFeatures]): Dataset[MediaFeatures] =
-    decodeImage(df, idCol, binCol)
-
   /** Decoded audio metadata (what [[decodeAudioMeta]] emits). */
   final case class AudioMeta(
       item_id: Long,

@@ -22,7 +22,6 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * shapes route:
   *
   *  - [[register]]: the count/sum mart of
-  *    [[graft.ops.LakeOps.maintainAggMart]] or
   *    [[graft.ops.LakeOps.maintainAggMartTotal]] — (key, n_rows, total)
   *    for one grouping key, (k1, …, kn, n_rows, total, mkey) for a
   *    composite one — `count(1)` and the dsum cast tower over the

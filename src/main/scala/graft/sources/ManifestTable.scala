@@ -69,11 +69,12 @@ import org.apache.spark.sql.functions.col
   * and misconfiguration propagate so real failures stay loud. */
 final class NotDeltaExpressible(msg: String) extends IllegalStateException(msg)
 
-/** Thrown by the strict-CAS content ops (merge / delete / delete-mor /
-  * purge-dv / compact-small / apply-changes / schema-evolution commits)
-  * when the tip advanced past the version the op planned against — the
-  * "concurrent modification … re-run" abort, as a TYPE so retry logic
-  * ([[ManifestTable.applyChangesMor]]'s self-heal,
+/** Thrown by every op that commits PLANNED at the version it read
+  * (merge / delete / delete-mor / purge-dv / the OPTIMIZEs /
+  * apply-changes / schema, spec and constraint additions — see
+  * [[ManifestTable]]'s `commit`) when the tip advanced past that
+  * version — the "concurrent modification … re-run" abort, as a TYPE
+  * so retry logic ([[ManifestTable.applyChangesMor]]'s self-heal,
   * [[ManifestTable.deleteMor]]'s re-plan) can match it without parsing
   * message text. Always safe to re-run the aborted op from scratch. */
 final class ConcurrentCommit(msg: String) extends IllegalStateException(msg)
@@ -1649,14 +1650,9 @@ object ManifestTable {
     val bad = if (badRow.isNullAt(0)) 0L else badRow.getLong(0)
     require(bad == 0L,
       s"cannot add CHECK constraint '$name' ($exprText): $bad existing rows violate it")
-    commit(spark, root, "add_constraint", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during add_constraint (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (s"$CheckPrefix$name" -> exprText),
-      tip => fileStats(spark, root, tip))
+    commit(spark, root, "add_constraint", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (s"$CheckPrefix$name" -> exprText),
+      fileStats(spark, root, v0))
   }
 
   /** `ALTER TABLE DROP CONSTRAINT name` — one metadata commit. */
@@ -1749,14 +1745,9 @@ object ManifestTable {
     val bad = if (badRow.isNullAt(0)) 0L else badRow.getLong(0)
     require(bad == 0L,
       s"cannot mark '$name' generated as ($exprText): $bad existing rows differ")
-    commit(spark, root, "add_generated", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during add_generated (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (s"$GenPrefix$name" -> exprText),
-      tip => fileStats(spark, root, tip))
+    commit(spark, root, "add_generated", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (s"$GenPrefix$name" -> exprText),
+      fileStats(spark, root, v0))
   }
 
   /** Drop a generated-column DEFINITION (the column and its data stay;
@@ -2392,6 +2383,12 @@ object ManifestTable {
   private def dvFrame(spark: SparkSession, root: String, dvPath: String): DataFrame =
     spark.read.schema(dvSchema).parquet(dataPath(root, dvPath))
 
+  /** The files (in [[dvFileKey]] form) the deletion vector `dv` names —
+    * one distinct-file collect, bounded by the table's file count. */
+  private def dvFiles(spark: SparkSession, root: String, dv: Option[String]): Set[String] =
+    dv.fold(Set.empty[String])(p =>
+      dvFrame(spark, root, p).select("file").distinct().collect().map(_.getString(0)).toSet)
+
   private def emptyDvFrame(spark: SparkSession): DataFrame =
     spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], dvSchema)
@@ -2515,15 +2512,10 @@ object ManifestTable {
     val logHigh = vs.flatMap(v =>
       manifestMeta(spark, root, v).get(RowIdHighKey)).map(_.toLong)
       .reduceOption(_ max _)
-    commit(spark, root, "enable_row_tracking", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during enable_row_tracking (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (RowTrackingKey -> "on") ++
+    commit(spark, root, "enable_row_tracking", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (RowTrackingKey -> "on") ++
         logHigh.map(h => Map(RowIdHighKey -> h.toString)).getOrElse(Map.empty),
-      tip => fileStats(spark, root, tip))
+      fileStats(spark, root, v0))
   }
 
   /** Read `version` (default tip) with each row's immutable tracking id
@@ -2727,14 +2719,9 @@ object ManifestTable {
         org.apache.spark.sql.types.StructField(to, f.dataType, f.nullable, md)
       }
     })
-    commit(spark, root, "rename_column", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during rename (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (SchemaKey -> renamed.json),
-      tip => fileStats(spark, root, tip))
+    commit(spark, root, "rename_column", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (SchemaKey -> renamed.json),
+      fileStats(spark, root, v0))
   }
 
   /** Metadata-only DROP COLUMN (the column-mapping drop of Delta's
@@ -2793,14 +2780,9 @@ object ManifestTable {
         new org.apache.spark.sql.types.MetadataBuilder().withMetadata(f.metadata)
           .putString(PhysicalKey, phys).putBoolean(DroppedKey, true).build())
     })
-    commit(spark, root, "drop_column", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during drop (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (SchemaKey -> dropped.json),
-      tip => fileStats(spark, root, tip))
+    commit(spark, root, "drop_column", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (SchemaKey -> dropped.json),
+      fileStats(spark, root, v0))
   }
 
   /** Widening-only schema merge: common columns must keep their exact
@@ -3179,10 +3161,36 @@ object ManifestTable {
       .toSeq.sorted
   }
 
-  /** Publish `files` as version tip+1 via the atomic rename; retries on
-    * a lost race. `base` re-resolves the carried-over file set against
-    * the version the retry lands on (append keeps the new tip's files,
-    * overwrite/compact keep none / their own rewrite). */
+  /** Publish `newFiles` as version tip+1 via the atomic slot claim;
+    * retries on a lost race. What the new version carries beside
+    * `newFiles` follows one of three policies:
+    *
+    *  - PLANNED (the overload taking `v0`): the op read the table at
+    *    `v0`, and its carried files, meta and stats are values derived
+    *    from `v0`. If any other commit landed first, the publish aborts
+    *    with [[ConcurrentCommit]] ("concurrent modification … re-run").
+    *    The check is on the version, not the file set: a racer that
+    *    keeps the files (a MOR delete's vector, a metadata op) would
+    *    otherwise be clobbered by the v0-derived meta. Every content
+    *    rewrite, MOR op and schema/spec/constraint addition plans.
+    *  - RE-BASE: `base`, `metaAt` and `statsAt` re-resolve against the
+    *    tip each attempt lands on, so the racer's work is kept (append,
+    *    analyze, dropping a constraint or a generated column).
+    *  - REPLACE: `base` is empty and meta/stats ignore the tip, so the
+    *    new version names only its own files (create, overwrite,
+    *    restore, apply-refresh, clone). */
+  private def commit(
+      spark: SparkSession,
+      root: String,
+      op: String,
+      v0: Long,
+      newFiles: Seq[String],
+      carried: Seq[String],
+      meta: Map[String, String],
+      stats: Map[String, ManifestStats.FileStats]): Long =
+    commit(spark, root, op, newFiles, _ => carried, _ => meta, _ => stats,
+      plannedAt = Some(v0))
+
   private def commit(
       spark: SparkSession,
       root: String,
@@ -3191,7 +3199,8 @@ object ManifestTable {
       base: Long => Seq[String],
       metaAt: Long => Map[String, String],
       statsAt: Long => Map[String, ManifestStats.FileStats] = _ => Map.empty,
-      appendShaped: Boolean = false): Long = {
+      appendShaped: Boolean = false,
+      plannedAt: Option[Long] = None): Long = {
     val f = fs(spark, root)
     f.mkdirs(new Path(s"$root/$LogDir"))
     var attempt = 0
@@ -3200,6 +3209,8 @@ object ManifestTable {
       attempt += 1
       try {
         val tip = versions(spark, root).lastOption.getOrElse(0L)
+        plannedAt.foreach(v0 => if (tip != v0) throw new ConcurrentCommit(
+          s"concurrent modification of $root during $op (planned v$v0, tip v$tip) — re-run"))
         val next = tip + 1
         // metadata re-resolves against the tip the retry lands on, exactly
         // like the file base — an append's widened schema must widen the
@@ -3685,14 +3696,9 @@ object ManifestTable {
     require(!cur.exists(_.name == pt.name),
       s"transform '${pt.name}' is already part of the spec")
     val newSpec = (cur :+ pt).map(_.serialized).mkString(";")
-    commit(spark, root, "evolve_spec", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during evolve_spec (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => manifestMeta(spark, root, tip) + (TransformsKey -> newSpec),
-      tip => fileStats(spark, root, tip))
+    commit(spark, root, "evolve_spec", v0, Seq.empty, manifestFiles(spark, root, v0),
+      manifestMeta(spark, root, v0) + (TransformsKey -> newSpec),
+      fileStats(spark, root, v0))
   }
 
   /** `ALTER TABLE ... DROP PARTITION FIELD` — the inverse of
@@ -3712,18 +3718,11 @@ object ManifestTable {
     require(cur.exists(_.name == transformName),
       s"no transform '$transformName' in the spec (have ${cur.map(_.name).mkString(", ")})")
     val remaining = cur.filterNot(_.name == transformName)
-    commit(spark, root, "drop_partition_field", Seq.empty,
-      tip => {
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during drop_partition_field (planned v$v0, tip v$tip) — re-run")
-        manifestFiles(spark, root, tip)
-      },
-      tip => {
-        val base = manifestMeta(spark, root, tip)
-        if (remaining.isEmpty) base - TransformsKey
-        else base + (TransformsKey -> remaining.map(_.serialized).mkString(";"))
-      },
-      tip => fileStats(spark, root, tip))
+    val base = manifestMeta(spark, root, v0)
+    commit(spark, root, "drop_partition_field", v0, Seq.empty, manifestFiles(spark, root, v0),
+      if (remaining.isEmpty) base - TransformsKey
+      else base + (TransformsKey -> remaining.map(_.serialized).mkString(";")),
+      fileStats(spark, root, v0))
   }
 
   /** Idempotent upsert — [[appendIdempotent]]'s exactly-once contract
@@ -3781,8 +3780,8 @@ object ManifestTable {
     * delete key are never read; past `maxKeys` the position scan falls
     * back to all files — correct, just not incremental); the vector
     * write is sidecar-sized; inserts are an ordinary append. Same
-    * single-writer contract as [[appendIdempotent]]; same concurrency
-    * abort as [[merge]] (the commit validates the planned file set). */
+    * single-writer contract as [[appendIdempotent]]; the commit is
+    * planned like [[merge]]'s, and its abort re-plans (below). */
   def applyChangesMor(
       spark: SparkSession,
       root: String,
@@ -3810,24 +3809,23 @@ object ManifestTable {
     }
     // SELF-HEAL on the CAS abort: a streaming CDC sink races periodic
     // maintenance (OPTIMIZE, another writer's commit) as a matter of
-    // course, and applying is idempotent by watermark — so instead of
-    // killing the query with "re-run", re-PLAN at the new tip a few
-    // times (each attempt re-reads the vector, the file set, and the
-    // replay watermark, so a batch another attempt already landed
-    // no-ops). Sustained contention still surfaces the abort.
-    var attempts = 4
-    while (true) {
-      try return applyChangesMorOnce(spark, root, feed, keyCol, writerId,
-        batchId, statsColumns, bloomColumns, maxKeys, extraMeta, feedTags)
-      catch {
-        // the TYPED strict-CAS abort (any op inside the attempt): a full
-        // re-plan re-reads the vector, the file set, and the watermark,
-        // so it is always equivalent — message text is never parsed
-        case _: ConcurrentCommit if attempts > 1 => attempts -= 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    // course, and applying is idempotent by watermark — each re-plan
+    // re-reads the vector, the file set, and the replay watermark, so a
+    // batch another attempt already landed no-ops
+    replanOnConflict(applyChangesMorOnce(spark, root, feed, keyCol,
+      writerId, batchId, statsColumns, bloomColumns, maxKeys, extraMeta, feedTags))
   }
+
+  /** Run `once` — an op that plans at the tip and commits PLANNED — and
+    * re-run it from scratch when a racing commit aborts it with
+    * [[ConcurrentCommit]], up to `attempts` runs in all; sustained
+    * contention surfaces the last abort. Sound only for ops whose
+    * re-plan at the new tip is always equivalent (declarative or
+    * watermark-idempotent: [[applyChangesMor]], [[deleteMor]]). The
+    * abort is matched by type; message text is never parsed. */
+  private def replanOnConflict[T](once: => T, attempts: Int = 4): T =
+    try once
+    catch { case _: ConcurrentCommit if attempts > 1 => replanOnConflict(once, attempts - 1) }
 
   private def applyChangesMorOnce(
       spark: SparkSession,
@@ -3967,21 +3965,12 @@ object ManifestTable {
       toPhysicalCols(tableSchema, statsColumns), toPhysicalCols(tableSchema, bloomColumns),
       virtualCols = tipTransforms.map(t => t.name -> t.expr))
     // -------- ONE publish: files + vector + watermark together ------
-    commit(spark, root, "apply-changes", staged,
-      tip => {
-        // strict version CAS: a racing commit that PRESERVES the file
-        // set (a MOR delete's vector, a metadata op's constraint) would
-        // pass a files-only compare and then be CLOBBERED by this op's
-        // v0-derived meta — any tip advance aborts, loudly and retryably
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during apply-changes (planned v$v0, tip v$tip) — re-run")
-        planned
-      },
-      _ => manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
+    commit(spark, root, "apply-changes", v0, staged, planned,
+      manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
         tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty) ++
         dvRel.map(r => Map(DvKey -> r)).getOrElse(Map.empty) ++
         extraMeta + (key -> batchId.toString),
-      _ => fileStats(spark, root, v0) ++ newStats)
+      fileStats(spark, root, v0) ++ newStats)
     } finally fd.unpersist(blocking = false)
   }
 
@@ -4020,43 +4009,57 @@ object ManifestTable {
   /** OPTIMIZE: rewrite the current content into ceil(bytes/target) files
     * and commit the rewrite as a new version. Relational content is
     * untouched; readers on the old version keep their exact file set.
+    * The committed partition spec survives and its virtual stats are
+    * re-collected. A commit landing between plan and publish aborts with
+    * [[ConcurrentCommit]] (re-run), as in [[compactSmall]] — replacing
+    * the tip's files would drop the racer's rows.
     * Returns (newVersion, dataFilesAfter). */
   def compact(spark: SparkSession, root: String, targetFileBytes: Long,
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): (Long, Int) = {
     require(targetFileBytes > 0, "compact requires a positive target file size")
+    rewriteAll(spark, root, "compact", targetFileBytes, statsColumns, bloomColumns,
+      recluster = None)(_.repartition(_))
+  }
+
+  /** The full-rewrite OPTIMIZE shared by [[compact]], [[optimizeZOrder]]
+    * and [[optimizeClusterBy]]: plan at the tip v0, read all of v0
+    * through [[readForRewrite]] (vector applied, ids materialized when
+    * tracked), lay it out into ceil(bytes/target) files with `layout`
+    * (logical names in and out), collect `statsColumns`/`bloomColumns`
+    * plus the virtual stats of the spec the new version commits, and
+    * publish PLANNED at v0. The spec is `recluster` alone when given
+    * (source column named logically, committed physically), else v0's
+    * spec carried. CHECK constraints, generated columns and row-tracking
+    * state carry; the vector drops (it is applied). */
+  private def rewriteAll(spark: SparkSession, root: String, op: String,
+      targetFileBytes: Long, statsColumns: Seq[String], bloomColumns: Seq[String],
+      recluster: Option[PartitionTransform])(
+      layout: (DataFrame, Int) => DataFrame): (Long, Int) = {
+    val vs = versions(spark, root)
+    require(vs.nonEmpty, s"$root is not a manifest table")
+    val v0 = vs.max
+    val files = manifestFiles(spark, root, v0)
     val f = fs(spark, root)
-    val tipFiles = {
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"$root is not a manifest table")
-      manifestFiles(spark, root, vs.max)
-    }
-    val totalBytes = tipFiles.map(p => f.getFileStatus(new Path(dataPath(root, p))).getLen).sum
+    val totalBytes = files.map(p => f.getFileStatus(new Path(dataPath(root, p))).getLen).sum
     val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tipV = versions(spark, root).last
-    val tipSchema = schemaOf(spark, root, tipV)
-    val tracked = rowTrackingEnabled(spark, root, tipV)
-    // an id-preserving rewrite: row ids ride into the new files as a
-    // materialized physical column (invisible to the committed schema)
-    val current =
-      if (tracked) readWithRowIds(spark, root).withColumnRenamed("_row_id", RowIdCol)
-      else read(spark, root)
-    val schemaJson = tipSchema.map(_.json).getOrElse(read(spark, root).schema.json)
-    val staged = stage(spark, root, toPhysical(current.repartition(nFiles), tipSchema))
-    // the committed partition spec SURVIVES a full rewrite (the
-    // evolvePartitionSpec contract: OPTIMIZE collects virtual stats for
-    // all committed transforms), matching compactSmall
-    val tipTransforms = transformsOf(spark, root, tipV)
+    val schema = schemaOf(spark, root, v0)
+    val tracked = rowTrackingEnabled(spark, root, v0)
+    val current = readForRewrite(spark, root, v0, files, tracked)
+    recluster.foreach(t => require(current.columns.contains(t.sourceCol),
+      s"transform column '${t.sourceCol}' not in table schema ${current.columns.mkString(",")}"))
+    val pt = recluster.map(t => t.withSourceCol(toPhysicalCols(schema, Seq(t.sourceCol)).head))
+    val spec = pt.fold(transformsOf(spark, root, v0))(Seq(_))
+    val staged = stage(spark, root, toPhysical(layout(current, nFiles), schema))
     val stats = ManifestStats.collect(spark, root, staged,
-      toPhysicalCols(tipSchema, statsColumns), toPhysicalCols(tipSchema, bloomColumns),
-      virtualCols = tipTransforms.map(t => t.name -> t.expr))
-    (commit(spark, root, "compact", staged, _ => Seq.empty,
-      tip => manifestMeta(spark, root, tip).filter(k =>
-        k._1 == TransformsKey ||
-          k._1.startsWith(CheckPrefix) || k._1.startsWith(GenPrefix) ||
-          rowTrackingMeta(k._1)) ++
-        storedMarks(staged, tracked) + (SchemaKey -> schemaJson),
-      _ => stats), staged.size)
+      toPhysicalCols(schema, statsColumns), toPhysicalCols(schema, bloomColumns),
+      virtualCols = spec.map(t => t.name -> t.expr))
+    val meta = manifestMeta(spark, root, v0).filter(k =>
+      (pt.isEmpty && k._1 == TransformsKey) ||
+        k._1.startsWith(CheckPrefix) || k._1.startsWith(GenPrefix) || rowTrackingMeta(k._1)) ++
+      storedMarks(staged, tracked) ++ pt.map(t => TransformsKey -> t.serialized) +
+      (SchemaKey -> schema.map(_.json).getOrElse(current.schema.json))
+    (commit(spark, root, op, v0, staged, Seq.empty, meta, stats), staged.size)
   }
 
   /** Rewrite files that carry materialized row ids declare it in their
@@ -4065,6 +4068,19 @@ object ManifestTable {
   private def storedMarks(staged: Seq[String], tracked: Boolean): Map[String, String] =
     if (!tracked) Map.empty
     else staged.map(f => RowBasePrefix + dvFileKey(f) -> RowBaseStored).toMap
+
+  /** The input of a planned rewrite: `paths` as of `v0` with v0's
+    * deletion vector applied (a rewrite never resurrects a MOR-deleted
+    * row) and, when `tracked`, each row's id materialized as
+    * [[RowIdCol]] so the rewritten files keep it. Shared by [[merge]],
+    * [[delete]], [[compactSmall]], [[purgeDeletes]] and the full-rewrite
+    * OPTIMIZEs ([[rewriteAll]]). */
+  private def readForRewrite(spark: SparkSession, root: String, v0: Long,
+      paths: Seq[String], tracked: Boolean): DataFrame =
+    if (tracked)
+      readFilesWithRowIdsApplied(spark, root, v0, paths).withColumnRenamed("_row_id", RowIdCol)
+    else if (paths.isEmpty) read(spark, root, Some(v0)).limit(0)
+    else readFiles(spark, root, schemaOf(spark, root, v0), paths, deletionVector(spark, root, v0))
 
   /** Bin-packing OPTIMIZE — the shape Delta's `OPTIMIZE` actually runs,
     * where [[compact]] is the full rewrite: rewrite ONLY the files
@@ -4096,10 +4112,7 @@ object ManifestTable {
     val planned = manifestFiles(spark, root, v0)
     val tableSchema = schemaOf(spark, root, v0)
     val tracked = rowTrackingEnabled(spark, root, v0)
-    val dv = deletionVector(spark, root, v0)
-    val dvKeys = dv.map(p => dvFrame(spark, root, p)
-      .select("file").distinct().collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty[String])
+    val dvKeys = dvFiles(spark, root, deletionVector(spark, root, v0))
     val sizes = planned.map(p =>
       p -> f.getFileStatus(new Path(dataPath(root, p))).getLen).toMap
     val (affected, untouched) = planned.partition(p =>
@@ -4107,40 +4120,19 @@ object ManifestTable {
     if (affected.isEmpty) return (v0, MergeStats(0, untouched.size, 0))
     val nFiles = math.max(1L,
       (affected.map(sizes).sum + targetFileBytes - 1) / targetFileBytes).toInt
-    val affectedDf =
-      if (!tracked) readFiles(spark, root, tableSchema, affected, dv)
-      else {
-        import org.apache.spark.sql.functions.broadcast
-        val u = readFilesWithRowIds(spark, root, v0, affected)
-        (dv match {
-          case Some(p) =>
-            val d = dvFrame(spark, root, p)
-            u.join(broadcast(d),
-              u(DvFileCol) === d("file") && u(DvPosCol) === d("pos"), "left_anti")
-          case None => u
-        }).drop(DvFileCol, DvPosCol).withColumnRenamed("_row_id", RowIdCol)
-      }
     val staged = stage(spark, root,
-      toPhysical(affectedDf, tableSchema).repartition(nFiles))
+      toPhysical(readForRewrite(spark, root, v0, affected, tracked), tableSchema)
+        .repartition(nFiles))
     val tipTransforms = transformsOf(spark, root, v0)
     val newStats = ManifestStats.collect(spark, root, staged,
       toPhysicalCols(tableSchema, statsColumns), toPhysicalCols(tableSchema, bloomColumns),
       virtualCols = tipTransforms.map(t => t.name -> t.expr))
-    val version = commit(spark, root, "compact-small", staged,
-      tip => {
-        // strict version CAS: a racing commit that PRESERVES the file
-        // set (a MOR delete's vector, a metadata op's constraint) would
-        // pass a files-only compare and then be CLOBBERED by this op's
-        // v0-derived meta — any tip advance aborts, loudly and retryably
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during compact-small (planned v$v0, tip v$tip) — re-run")
-        untouched
-      },
-      _ => manifestMeta(spark, root, v0)
+    val version = commit(spark, root, "compact-small", v0, staged, untouched,
+      manifestMeta(spark, root, v0)
         .filter(kv => carriedMetaKey(kv._1) && kv._1 != DvKey) ++
         storedMarks(staged, tracked) ++
         tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty),
-      _ => fileStats(spark, root, v0) ++ newStats)
+      fileStats(spark, root, v0) ++ newStats)
     (version, MergeStats(affected.size, untouched.size, staged.size))
   }
 
@@ -4228,12 +4220,12 @@ object ManifestTable {
     * can survive in a carried file. Key sets beyond `maxKeys` fall back
     * to a full rewrite (correct, just not incremental).
     *
-    * Concurrency: the commit validates that the tip it lands on still
-    * names exactly the files the merge planned against and aborts with
-    * IllegalStateException otherwise (the Delta-style concurrent-
-    * modification conflict — the caller re-runs the merge against the
-    * new tip; appends that happened to commit first are preserved by the
-    * abort, never silently dropped).
+    * Concurrency: the commit is planned at the version the merge read
+    * and aborts with [[ConcurrentCommit]] if any other commit landed
+    * first (the Delta-style concurrent-modification conflict — the
+    * caller re-runs the merge against the new tip; appends that
+    * happened to commit first are preserved by the abort, never
+    * silently dropped).
     *
     * The source schema must match the table schema (use [[append]] for
     * widening); source keys must be non-null and unique per key — two
@@ -4282,45 +4274,26 @@ object ManifestTable {
     // so the change-feed walk can serve this merge as an id-diff:
     // deletes = the matched rows' old versions, inserts = the source
     // rows, carried rows provably unchanged
+    val carried = readForRewrite(spark, root, v0, affected, tracked)
+      .join(genSource.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
     val (staged, stagedStored) =
       if (tracked) {
-        val carried = readFilesWithRowIdsApplied(spark, root, v0, affected)
-          .join(genSource.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-          .withColumnRenamed("_row_id", RowIdCol)
         val sc = stage(spark, root, toPhysical(carried, tableSchema))
         val ss = stage(spark, root, toPhysical(genSource, tableSchema))
         (sc ++ ss, sc)
-      } else {
-        val affectedDf =
-          if (affected.isEmpty) read(spark, root, Some(v0)).limit(0)
-          // DV-applied, so a rewrite can never resurrect a MOR-deleted row
-          else readFiles(spark, root, tableSchema, affected,
-            deletionVector(spark, root, v0))
-        val merged = affectedDf
-          .join(genSource.select(col(keyCol)).distinct(), Seq(keyCol), "left_anti")
-          .unionByName(genSource)
-        (stage(spark, root, toPhysical(merged, tableSchema)), Seq.empty[String])
-      }
+      } else (stage(spark, root, toPhysical(carried.unionByName(genSource), tableSchema)),
+        Seq.empty[String])
     val newStats = ManifestStats.collect(spark, root, staged,
       toPhysicalCols(tableSchema, statsColumns), toPhysicalCols(tableSchema, bloomColumns))
-    val version = commit(spark, root, "merge", staged,
-      tip => {
-        // strict version CAS: a racing commit that PRESERVES the file
-        // set (a MOR delete's vector, a metadata op's constraint) would
-        // pass a files-only compare and then be CLOBBERED by this op's
-        // v0-derived meta — any tip advance aborts, loudly and retryably
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during merge (planned v$v0, tip v$tip) — re-run the merge")
-        untouched
-      },
+    val version = commit(spark, root, "merge", v0, staged, untouched,
       // the transform spec carries (rewritten files lose their virtual
       // stats until the next OPTIMIZE — sound, just less prunable there)
-      _ => manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
+      manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
         storedMarks(stagedStored, tracked) ++
         meta ++ tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty),
       // carried files keep the stats the planned version committed for
       // them; rewritten files take the freshly collected ones
-      _ => fileStats(spark, root, v0) ++ newStats)
+      fileStats(spark, root, v0) ++ newStats)
     (version, MergeStats(affected.size, untouched.size, staged.size))
   }
 
@@ -4348,37 +4321,19 @@ object ManifestTable {
     // under row tracking the surviving rows keep their ids
     // (materialized — an ID-PRESERVING rewrite), so the change-feed walk
     // serves this delete as an id-diff: exactly the removed rows
-    val survivors =
-      if (affected.isEmpty) read(spark, root, Some(v0)).limit(0)
-      else {
-        // DV-applied, so the rewrite can't resurrect a MOR-deleted row
-        val df =
-          if (tracked) readFilesWithRowIdsApplied(spark, root, v0, affected)
-            .withColumnRenamed("_row_id", RowIdCol)
-          else readFiles(spark, root, tableSchema, affected,
-            deletionVector(spark, root, v0))
-        // NOT(pred IS TRUE): a NULL predicate must keep the row
-        df.filter(org.apache.spark.sql.functions.not(
-          org.apache.spark.sql.functions.coalesce(predicate,
-            org.apache.spark.sql.functions.lit(false))))
-      }
+    // NOT(pred IS TRUE): a NULL predicate must keep the row
+    val survivors = readForRewrite(spark, root, v0, affected, tracked)
+      .filter(org.apache.spark.sql.functions.not(
+        org.apache.spark.sql.functions.coalesce(predicate,
+          org.apache.spark.sql.functions.lit(false))))
     val staged = stage(spark, root, toPhysical(survivors, tableSchema))
     val newStats = ManifestStats.collect(spark, root, staged,
       toPhysicalCols(tableSchema, statsColumns), toPhysicalCols(tableSchema, bloomColumns))
-    val version = commit(spark, root, "delete", staged,
-      tip => {
-        // strict version CAS: a racing commit that PRESERVES the file
-        // set (a MOR delete's vector, a metadata op's constraint) would
-        // pass a files-only compare and then be CLOBBERED by this op's
-        // v0-derived meta — any tip advance aborts, loudly and retryably
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during delete (planned v$v0, tip v$tip) — re-run the delete")
-        untouched
-      },
-      _ => manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
+    val version = commit(spark, root, "delete", v0, staged, untouched,
+      manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
         storedMarks(staged, tracked) ++
         tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty),
-      _ => fileStats(spark, root, v0) ++ newStats)
+      fileStats(spark, root, v0) ++ newStats)
     (version, MergeStats(affected.size, untouched.size, staged.size))
   }
 
@@ -4414,14 +4369,8 @@ object ManifestTable {
   def deleteMor(
       spark: SparkSession,
       root: String,
-      predicate: org.apache.spark.sql.Column): (Long, MergeStats) = {
-    var attempts = 4
-    while (true) {
-      try return deleteMorOnce(spark, root, predicate)
-      catch { case _: ConcurrentCommit if attempts > 1 => attempts -= 1 }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+      predicate: org.apache.spark.sql.Column): (Long, MergeStats) =
+    replanOnConflict(deleteMorOnce(spark, root, predicate))
 
   private def deleteMorOnce(
       spark: SparkSession,
@@ -4462,25 +4411,16 @@ object ManifestTable {
     val rel = s"$DvDir/dv-${UUID.randomUUID()}"
     allRows.write.parquet(s"$root/$rel")
     newlyDeleted.unpersist()
-    val version = commit(spark, root, "delete-mor", Seq.empty,
-      tip => {
-        // strict version CAS: a racing commit that PRESERVES the file
-        // set (a MOR delete's vector, a metadata op's constraint) would
-        // pass a files-only compare and then be CLOBBERED by this op's
-        // v0-derived meta — any tip advance aborts, loudly and retryably
-        if (tip != v0) throw new ConcurrentCommit(
-          s"concurrent modification of $root during delete-mor (planned v$v0, tip v$tip) — re-run the delete")
-        planned
-      },
+    val version = commit(spark, root, "delete-mor", v0, Seq.empty, planned,
       // carriedMetaKey includes DvKey, so ++ order matters: the NEW
       // vector overrides the carried old one
-      _ => manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
+      manifestMeta(spark, root, v0).filter(kv => carriedMetaKey(kv._1)) ++
         tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty) +
         (DvKey -> rel),
       // file stats carry UNCHANGED — they become keep-biased upper
       // bounds over the vector, which every skipping tier tolerates;
       // exact counting demotes DV'd files to a scan ([[countWhere]])
-      _ => fileStats(spark, root, v0))
+      fileStats(spark, root, v0))
     (version, MergeStats(affected.size, untouched.size, 0))
   }
 
@@ -4505,41 +4445,22 @@ object ManifestTable {
       case Some(p) =>
         val tableSchema = schemaOf(spark, root, v0)
         val tracked = rowTrackingEnabled(spark, root, v0)
-        val dvKeys = dvFrame(spark, root, p)
-          .select("file").distinct().collect().map(_.getString(0)).toSet
+        val dvKeys = dvFiles(spark, root, Some(p))
         val (affected, untouched) =
           planned.partition(f => dvKeys.contains(dvFileKey(f)))
-        val affectedDf =
-          if (!tracked) readFiles(spark, root, tableSchema, affected, Some(p))
-          else { // id-preserving targeted rewrite: ids materialize
-            import org.apache.spark.sql.functions.broadcast
-            val u = readFilesWithRowIds(spark, root, v0, affected)
-            val d = dvFrame(spark, root, p)
-            u.join(broadcast(d),
-              u(DvFileCol) === d("file") && u(DvPosCol) === d("pos"), "left_anti")
-              .drop(DvFileCol, DvPosCol).withColumnRenamed("_row_id", RowIdCol)
-          }
         val staged =
           if (affected.isEmpty) Seq.empty[String]
-          else stage(spark, root, toPhysical(affectedDf, tableSchema))
+          else stage(spark, root,
+            toPhysical(readForRewrite(spark, root, v0, affected, tracked), tableSchema))
         val newStats = ManifestStats.collect(spark, root, staged,
           toPhysicalCols(tableSchema, statsColumns),
           toPhysicalCols(tableSchema, bloomColumns))
-        val version = commit(spark, root, "purge-dv", staged,
-          tip => {
-            // strict version CAS: a racing commit that PRESERVES the file
-            // set (a MOR delete's vector, a metadata op's constraint) would
-            // pass a files-only compare and then be CLOBBERED by this op's
-            // v0-derived meta — any tip advance aborts, loudly and retryably
-            if (tip != v0) throw new ConcurrentCommit(
-              s"concurrent modification of $root during purge-dv (planned v$v0, tip v$tip) — re-run the purge")
-            untouched
-          },
-          _ => manifestMeta(spark, root, v0)
+        val version = commit(spark, root, "purge-dv", v0, staged, untouched,
+          manifestMeta(spark, root, v0)
             .filter(kv => carriedMetaKey(kv._1) && kv._1 != DvKey) ++
             storedMarks(staged, tracked) ++
             tableSchema.map(s => Map(SchemaKey -> s.json)).getOrElse(Map.empty),
-          _ => fileStats(spark, root, v0) ++ newStats)
+          fileStats(spark, root, v0) ++ newStats)
         (version, MergeStats(affected.size, untouched.size, staged.size))
     }
   }
@@ -4614,9 +4535,7 @@ object ManifestTable {
     // it to the scanned tier, where the DV-applied read is exact. The
     // distinct-file collect is bounded by the table's FILE count.
     val dv = deletionVector(spark, root, v)
-    val dvKeys: Set[String] = dv.map(p => dvFrame(spark, root, p)
-      .select("file").distinct().collect().map(_.getString(0)).toSet)
-      .getOrElse(Set.empty)
+    val dvKeys = dvFiles(spark, root, dv)
     val (demoted, full) = full0.partition(f => dvKeys.contains(dvFileKey(f)))
     val residual = residual0 ++ demoted
     // a full-match file without committed stats cannot happen (mustMatch
@@ -4644,42 +4563,16 @@ object ManifestTable {
     * files, committing per-file stats on the z-columns — after this,
     * [[readPruned]] predicates on ANY subset of `zCols` skip files.
     * Same versioning semantics as [[compact]]: relational content
-    * untouched, old versions keep their exact file sets.
+    * untouched, old versions keep their exact file sets, the committed
+    * partition spec carries, and a racing commit aborts the publish
+    * with [[ConcurrentCommit]] (re-run).
     * Returns (newVersion, dataFilesAfter). */
   def optimizeZOrder(spark: SparkSession, root: String, zCols: Seq[String],
       targetFileBytes: Long,
       bloomColumns: Seq[String] = Nil): (Long, Int) = {
     require(targetFileBytes > 0, "optimizeZOrder requires a positive target file size")
-    val f = fs(spark, root)
-    val tipFiles = {
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"$root is not a manifest table")
-      manifestFiles(spark, root, vs.max)
-    }
-    val totalBytes = tipFiles.map(p => f.getFileStatus(new Path(dataPath(root, p))).getLen).sum
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tipV = versions(spark, root).last
-    val tipSchema = schemaOf(spark, root, tipV)
-    val tracked = rowTrackingEnabled(spark, root, tipV)
-    val current =
-      if (tracked) readWithRowIds(spark, root).withColumnRenamed("_row_id", RowIdCol)
-      else read(spark, root)
-    val schemaJson = tipSchema.map(_.json).getOrElse(read(spark, root).schema.json)
-    val staged = stage(spark, root,
-      toPhysical(ZOrder.cluster(current, zCols, nFiles), tipSchema))
-    // carry the committed partition spec alongside the z-order layout
-    // and re-collect its virtual stats (the compactSmall contract)
-    val tipTransforms = transformsOf(spark, root, tipV)
-    val stats = ManifestStats.collect(spark, root, staged,
-      toPhysicalCols(tipSchema, zCols), toPhysicalCols(tipSchema, bloomColumns),
-      virtualCols = tipTransforms.map(t => t.name -> t.expr))
-    (commit(spark, root, "zorder", staged, _ => Seq.empty,
-      tip => manifestMeta(spark, root, tip).filter(k =>
-        k._1 == TransformsKey ||
-          k._1.startsWith(CheckPrefix) || k._1.startsWith(GenPrefix) ||
-          rowTrackingMeta(k._1)) ++
-        storedMarks(staged, tracked) + (SchemaKey -> schemaJson),
-      _ => stats), staged.size)
+    rewriteAll(spark, root, "zorder", targetFileBytes, zCols, bloomColumns,
+      recluster = None)(ZOrder.cluster(_, zCols, _))
   }
 
   /** OPTIMIZE CLUSTER BY a partition transform (Iceberg's hidden
@@ -4691,7 +4584,9 @@ object ManifestTable {
     * predicates on the source column through the transform and prune
     * EXACTLY — the hash layout that defeats source-column ranges, served
     * in a few manifest bytes instead of per-file bloom bits. Same
-    * versioning semantics as [[compact]]. Returns (newVersion, files).
+    * versioning semantics as [[compact]], including the
+    * [[ConcurrentCommit]] abort on a racing commit; the committed spec
+    * becomes `transform` alone. Returns (newVersion, files).
     */
   def optimizeClusterBy(spark: SparkSession, root: String,
       transform: PartitionTransform,
@@ -4699,40 +4594,8 @@ object ManifestTable {
       statsColumns: Seq[String] = Nil,
       bloomColumns: Seq[String] = Nil): (Long, Int) = {
     require(targetFileBytes > 0, "optimizeClusterBy requires a positive target file size")
-    val f = fs(spark, root)
-    val tipFiles = {
-      val vs = versions(spark, root)
-      require(vs.nonEmpty, s"$root is not a manifest table")
-      manifestFiles(spark, root, vs.max)
-    }
-    val totalBytes = tipFiles.map(p => f.getFileStatus(new Path(dataPath(root, p))).getLen).sum
-    val nFiles = math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-    val tipV = versions(spark, root).last
-    val tipSchema = schemaOf(spark, root, tipV)
-    val tracked = rowTrackingEnabled(spark, root, tipV)
-    val current =
-      if (tracked) readWithRowIds(spark, root).withColumnRenamed("_row_id", RowIdCol)
-      else read(spark, root)
-    require(current.columns.contains(transform.sourceCol),
-      s"transform column '${transform.sourceCol}' not in table schema ${current.columns.mkString(",")}")
-    // the caller names the source column LOGICALLY; the committed spec
-    // uses the PHYSICAL name, the space stats and pruning live in (the
-    // prune-time attribute rewrite then lines predicates up with it)
-    val pt = transform.withSourceCol(
-      toPhysicalCols(tipSchema, Seq(transform.sourceCol)).head)
-    val schemaJson = tipSchema.map(_.json).getOrElse(read(spark, root).schema.json)
-    val staged = stage(spark, root,
-      toPhysical(current, tipSchema).repartitionByRange(nFiles, pt.expr))
-    val stats = ManifestStats.collect(spark, root, staged,
-      toPhysicalCols(tipSchema, statsColumns), toPhysicalCols(tipSchema, bloomColumns),
-      virtualCols = Seq(pt.name -> pt.expr))
-    (commit(spark, root, "cluster", staged, _ => Seq.empty,
-      tip => manifestMeta(spark, root, tip).filter(k =>
-        k._1.startsWith(CheckPrefix) || k._1.startsWith(GenPrefix) ||
-          rowTrackingMeta(k._1)) ++
-        storedMarks(staged, tracked) +
-        (SchemaKey -> schemaJson) + (TransformsKey -> pt.serialized),
-      _ => stats), staged.size)
+    rewriteAll(spark, root, "cluster", targetFileBytes, statsColumns, bloomColumns,
+      recluster = Some(transform))(_.repartitionByRange(_, transform.expr))
   }
 
   /** RESTORE (Delta's `RESTORE TABLE ... TO VERSION`): make an older

@@ -58,6 +58,133 @@ class ConcurrencySpec extends SparkSpec {
     aborted.size()
   }
 
+  /** Run `op` with `racer` landing between its plan and its publish,
+    * deterministically: a one-shot claim arm on the `file` scheme runs
+    * the racer (whose own publish claims normally) the first time a
+    * manifest slot under `root` is claimed, then claims the op's slot
+    * with exists+rename — already taken by the racer, so the op's
+    * commit sees a tip it did not plan against. */
+  private def withRacer[T](root: String, racer: () => Unit)(op: => T): T = {
+    val armed = new java.util.concurrent.atomic.AtomicBoolean(true)
+    ManifestTable.registerSlotClaimer("file", new graft.sources.SlotClaimer {
+      def claim(f: org.apache.hadoop.fs.FileSystem,
+          tmp: org.apache.hadoop.fs.Path,
+          dst: org.apache.hadoop.fs.Path): Boolean = {
+        if (dst.toUri.getPath.startsWith(root) && armed.getAndSet(false)) racer()
+        !f.exists(dst) && f.rename(tmp, dst)
+      }
+    })
+    try op finally ManifestTable.unregisterSlotClaimer("file")
+  }
+
+  /** A 400-row planned-op fixture (4 files, a `k2 = 2 * o_orderkey`
+    * column for the generated-column op) and the 25-row batch the racer
+    * appends (keys disjoint from the fixture's). */
+  private lazy val fixture: (DataFrame, DataFrame) = {
+    val withK2 = orders.withColumn("k2", col("o_orderkey") * 2L)
+    val base = withK2.orderBy("o_orderkey").limit(400).localCheckpoint()
+    val extra = base.limit(25).withColumn("o_orderkey", col("o_orderkey") + 10000000L)
+      .withColumn("k2", col("o_orderkey") * 2L).localCheckpoint()
+    (base, extra)
+  }
+
+  /** Fresh fixture table at `root` (v1), then `setup`. */
+  private def fixtureTable(p: String, setup: String => Unit = _ => ()): String = {
+    val root = freshRoot(p)
+    ManifestTable.create(spark, root, fixture._1.repartition(4))
+    setup(root)
+    root
+  }
+
+  /** `op` planned on a fixture table must abort with the typed
+    * "concurrent modification … re-run" when an append lands first, and
+    * the table must hold exactly the fixture plus the racer's rows, with
+    * the racer's append as the tip. */
+  private def assertPlannedAbort(name: String, setup: String => Unit = _ => ())(
+      op: String => Any): String = {
+    val root = fixtureTable(s"cc_plan_$name", setup)
+    val before = ManifestTable.read(spark, root).count()
+    val e = withClue(s"$name: ")(intercept[graft.sources.ConcurrentCommit](withRacer(root,
+      () => { ManifestTable.append(spark, root, fixture._2); () })(op(root))))
+    assert(e.getMessage.contains("concurrent modification") && e.getMessage.contains("re-run"),
+      s"$name: ${e.getMessage}")
+    assert(ManifestTable.history(spark, root).last.operation === "append",
+      s"$name published over the racing append")
+    assert(ManifestTable.read(spark, root).count() === before + 25L,
+      s"$name: the racer's rows must survive the abort")
+    root
+  }
+
+  test("full-rewrite OPTIMIZEs abort on a commit landing between plan and publish; the racer's rows survive") {
+    val (base, extra) = fixture
+    val target = 64L * 1024 * 1024
+    Seq[(String, String => Any)](
+      "compact" -> (r => ManifestTable.compact(spark, r, target)),
+      "zorder" -> (r => ManifestTable.optimizeZOrder(spark, r, Seq("o_custkey", "o_orderkey"), target)),
+      "cluster" -> (r => ManifestTable.optimizeClusterBy(spark, r,
+        graft.sources.BucketTransform(4, "o_custkey"), target))
+    ).foreach { case (name, op) =>
+      val root = assertPlannedAbort(name)(op)
+      // the documented recovery: a re-run rewrites everything, racer included
+      op(root)
+      assertSameContent(ManifestTable.read(spark, root), base.unionByName(extra),
+        s"$name re-run")
+    }
+  }
+
+  test("every other planned op aborts on a commit landing between plan and publish") {
+    val (base, _) = fixture
+    val someKeys = base.filter(col("o_orderkey") % 5 === 0).localCheckpoint()
+    val bucket = graft.sources.BucketTransform(4, "o_custkey")
+    Seq[(String, String => Unit, String => Any)](
+      ("merge", _ => (), r => ManifestTable.merge(spark, r,
+        someKeys.withColumn("o_totalprice", col("o_totalprice") + 1.0), "o_orderkey")),
+      ("delete", _ => (), r => ManifestTable.delete(spark, r, col("o_orderkey") % 5 === 0)),
+      ("compact_small", _ => (), r => ManifestTable.compactSmall(spark, r,
+        64L * 1024 * 1024, 64L * 1024 * 1024)),
+      ("purge_deletes",
+        r => { ManifestTable.deleteMor(spark, r, col("o_orderkey") % 5 === 0); () },
+        r => ManifestTable.purgeDeletes(spark, r)),
+      ("add_constraint", _ => (), r => ManifestTable.addCheckConstraint(spark, r,
+        "positive_price", "o_totalprice > 0")),
+      ("add_generated", _ => (), r => ManifestTable.addGeneratedColumn(spark, r,
+        "k2", "o_orderkey * 2")),
+      ("enable_row_tracking", _ => (), r => ManifestTable.enableRowTracking(spark, r)),
+      ("rename_column", _ => (), r => ManifestTable.renameColumn(spark, r,
+        "o_orderpriority", "priority")),
+      ("drop_column", _ => (), r => ManifestTable.dropColumn(spark, r, "o_orderpriority")),
+      ("evolve_spec", _ => (), r => ManifestTable.evolvePartitionSpec(spark, r, bucket)),
+      ("drop_partition_field",
+        r => { ManifestTable.evolvePartitionSpec(spark, r, bucket); () },
+        r => ManifestTable.dropPartitionField(spark, r, bucket.name))
+    ).foreach { case (name, setup, op) => assertPlannedAbort(name, setup)(op) }
+  }
+
+  test("a commit landing between plan and publish: applyChangesMor and deleteMor re-plan, append re-bases") {
+    val (base, extra) = fixture
+    val racer = (root: String) => () => { ManifestTable.append(spark, root, extra); () }
+    val r1 = fixtureTable("cc_heal_apply")
+    val inserts = base.limit(10).withColumn("o_orderkey", col("o_orderkey") + 20000000L)
+      .withColumn("k2", col("o_orderkey") * 2L)
+    val deletes = base.filter(col("o_orderkey") % 5 === 0)
+    val feed = inserts.withColumn("_change_type", lit("insert"))
+      .unionByName(deletes.withColumn("_change_type", lit("delete"))).localCheckpoint()
+    withRacer(r1, racer(r1))(
+      ManifestTable.applyChangesMor(spark, r1, feed, "o_orderkey", "sink", 1L))
+    assertSameContent(ManifestTable.read(spark, r1),
+      base.filter(col("o_orderkey") % 5 =!= 0).unionByName(extra).unionByName(inserts),
+      "apply-changes after a racing append")
+    val r2 = fixtureTable("cc_heal_delete")
+    withRacer(r2, racer(r2))(ManifestTable.deleteMor(spark, r2, col("o_orderkey") % 5 === 0))
+    assertSameContent(ManifestTable.read(spark, r2),
+      base.unionByName(extra).filter(col("o_orderkey") % 5 =!= 0),
+      "delete-mor after a racing append")
+    val r3 = fixtureTable("cc_rebase_append")
+    withRacer(r3, racer(r3))(ManifestTable.append(spark, r3, inserts))
+    assertSameContent(ManifestTable.read(spark, r3),
+      base.unionByName(extra).unionByName(inserts), "append after a racing append")
+  }
+
   test("APPEND vs APPEND: both land without aborts (commit re-bases); no rows lost") {
     val root = freshRoot("cc_app")
     ManifestTable.create(spark, root, orders.limit(0))

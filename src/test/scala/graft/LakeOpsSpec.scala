@@ -243,18 +243,18 @@ class LakeOpsSpec extends SparkSpec {
     val src = root(); val mart = root()
     val orders = Tables.load(spark, "/root/testdata/sf0.001", "orders")
     ManifestTable.create(spark, src, orders.filter(col("o_orderstatus") === "F"))
-    val (c0, n0) = graft.ops.LakeOps.maintainAggMart(spark, src, mart, "o_orderstatus", "o_totalprice")
+    val (c0, n0) = graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     assert(c0 === 1L && n0 === orders.filter(col("o_orderstatus") === "F").count())
     ManifestTable.append(spark, src, orders.filter(col("o_orderstatus") =!= "F"))
-    val (c1, n1) = graft.ops.LakeOps.maintainAggMart(spark, src, mart, "o_orderstatus", "o_totalprice")
+    val (c1, n1) = graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     assert(c1 === 2L && n1 === orders.filter(col("o_orderstatus") =!= "F").count())
-    // the consumed cursor rides the merge commit's metadata atomically
+    // the consumed cursor rides the mart commit's metadata atomically
     val tipMeta = ManifestTable.manifestMeta(spark, mart,
       ManifestTable.versions(spark, mart).max)
-    assert(tipMeta("agg-cursor") === "2")
+    assert(tipMeta("txn-aggmart-total") === "2")
     // caught up: returns without committing a new mart version
     val before = ManifestTable.versions(spark, mart).max
-    val (c2, n2) = graft.ops.LakeOps.maintainAggMart(spark, src, mart, "o_orderstatus", "o_totalprice")
+    val (c2, n2) = graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     assert(c2 === 2L && n2 === 0L)
     assert(ManifestTable.versions(spark, mart).max === before)
     // maintained mart == from-scratch aggregate, including the DOUBLE
@@ -269,7 +269,7 @@ class LakeOpsSpec extends SparkSpec {
     // a non-append source change surfaces the full-refresh contract
     ManifestTable.overwrite(spark, src, orders.limit(3))
     val e = intercept[graft.sources.NotDeltaExpressible] {
-      graft.ops.LakeOps.maintainAggMart(spark, src, mart, "o_orderstatus", "o_totalprice")
+      graft.ops.LakeOps.maintainAggMartTotal(spark, src, mart, Seq("o_orderstatus"), "o_totalprice")
     }
     assert(e.getMessage.contains("non-append"))
   }

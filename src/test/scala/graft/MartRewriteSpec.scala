@@ -32,7 +32,7 @@ class MartRewriteSpec extends SparkSpec {
     val mart = freshRoot("mv_mart")
     ManifestTable.create(spark, fact, orders.filter(col("o_orderstatus") === "F"))
     ManifestTable.append(spark, fact, orders.filter(col("o_orderstatus") =!= "F"))
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     // ground truth BEFORE registering: the plain fact-scan aggregate
     val direct = factAgg(fact).collect().map(r =>
       (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
@@ -54,7 +54,7 @@ class MartRewriteSpec extends SparkSpec {
     val fact = freshRoot("mv_fact2")
     val mart = freshRoot("mv_mart2")
     ManifestTable.create(spark, fact, orders)
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
@@ -80,7 +80,7 @@ class MartRewriteSpec extends SparkSpec {
     val fact = freshRoot("mv_fact_kf")
     val mart = freshRoot("mv_mart_kf")
     ManifestTable.create(spark, fact, orders)
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     def keyFiltered = ManifestTable.read(spark, fact)
       .filter(col("o_orderstatus").isin("F", "O"))
       .groupBy("o_orderstatus")
@@ -133,7 +133,7 @@ class MartRewriteSpec extends SparkSpec {
       assert(!scansUnder(sumAgg).exists(_.contains(mmName)),
         "sum shapes must not route to the minmax mart")
       // with BOTH marts registered, each shape routes to its own mart
-      LakeOps.maintainAggMart(spark, fact, sumMart, "o_orderstatus", "o_totalprice")
+      LakeOps.maintainAggMartTotal(spark, fact, sumMart, Seq("o_orderstatus"), "o_totalprice")
       MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", sumMart)
       val sumName = new java.io.File(sumMart).getName
       assert(scansUnder(sumAgg).exists(_.contains(sumName)),
@@ -199,7 +199,7 @@ class MartRewriteSpec extends SparkSpec {
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, fact, f) // v1
     ManifestTable.append(spark, fact, orders.filter(col("o_orderstatus") =!= "F")) // v2
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
@@ -235,7 +235,7 @@ class MartRewriteSpec extends SparkSpec {
     val mart = freshRoot("mv_mart3")
     val f = orders.filter(col("o_orderstatus") === "F")
     ManifestTable.create(spark, fact, f)
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       // new fact data, mart NOT maintained: the rewrite serves the
@@ -244,7 +244,7 @@ class MartRewriteSpec extends SparkSpec {
       val stale = factAgg(fact).collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(stale === Map("F" -> f.count()), s"expected the snapshot, got $stale")
       // maintain + re-register: fresh again
-      LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+      LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
       MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
       val fresh = factAgg(fact).collect().map(r => (r.getString(0), r.getLong(1))).toMap
       assert(fresh === Map("F" -> f.count(),
@@ -256,7 +256,7 @@ class MartRewriteSpec extends SparkSpec {
     val fact = freshRoot("mv_fact_avg")
     val mart = freshRoot("mv_mart_avg")
     ManifestTable.create(spark, fact, orders)
-    LakeOps.maintainAggMart(spark, fact, mart, "o_orderstatus", "o_totalprice")
+    LakeOps.maintainAggMartTotal(spark, fact, mart, Seq("o_orderstatus"), "o_totalprice")
     MartRewrite.register(spark, fact, Seq("o_orderstatus"), "o_totalprice", mart)
     try {
       val martName = new java.io.File(mart).getName
